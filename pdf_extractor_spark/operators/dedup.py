@@ -1406,6 +1406,16 @@ def lsh_bands_sweep(
     FIXED size while the corpus grows; banding metrics on a uniform
     sample are unbiased estimates of the corpus metrics. None = whole
     input (the test-SF default the oracle mirrors)."""
+    if layouts is None:
+        layouts = [(8, 2), (4, 4), (2, 8)]
+    if not layouts:
+        raise ValueError("lsh_bands_sweep: layouts must not be empty")
+    for bands, rows_per_band in layouts:
+        if bands < 1 or rows_per_band < 1 or bands * rows_per_band > num_hashes:
+            raise ValueError(
+                f"lsh_bands_sweep: layout ({bands}, {rows_per_band}) needs "
+                f"1 <= bands * rows_per_band <= num_hashes={num_hashes}"
+            )
     if sample_mod is not None and sample_mod > 1:
         bucket = F.pmod(
             simhash_token_hash(
@@ -1419,8 +1429,6 @@ def lsh_bands_sweep(
         eager=True
     )
     truth = _exact_jaccard_truth(sid, threshold).localCheckpoint(eager=True)
-    if layouts is None:
-        layouts = [(8, 2), (4, 4), (2, 8)]
     out = None
     for bands, rows_per_band in layouts:
         row = _banding_scoreboard(sig, truth, bands, rows_per_band)

@@ -2,11 +2,11 @@
 
 Two implementations, used for different surfaces:
 
-1. `extract_validate_udf` — the PIPELINE stage: ONE Arrow-batched pandas UDF
-   that runs template field extraction AND schema validation per document via
-   the oracle (exact Python-`re`/strptime parity, typed values flow directly
-   from extraction into validation like in the reference). One Python
-   crossing per batch instead of two.
+1. `classify_extract_validate_udf` — the PIPELINE stage: ONE Arrow-batched
+   pandas UDF that runs rule classification, template field extraction AND
+   schema validation per document via the oracle (exact Python-`re`/strptime
+   parity, typed values flow directly from extraction into validation like
+   in the reference). One Python crossing per batch.
 
 2. `field_error_col` / `cpf_valid_col` / `cnpj_valid_col` — fully COLUMNAR
    field validators (whole-stage codegen, no Python) compiled from the same
@@ -27,13 +27,6 @@ VALIDATION_TYPE = T.StructType(
         T.StructField("valid", T.BooleanType(), True),
         T.StructField("errors", T.MapType(T.StringType(), T.StringType()), True),
         T.StructField("warnings", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
-_EXTRACT_VALIDATE_TYPE = T.StructType(
-    [
-        T.StructField("fields", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("validation", VALIDATION_TYPE, True),
     ]
 )
 
@@ -212,76 +205,6 @@ def classify_extract_validate_udf(
                             apply_custom_outcome(
                                 validation, cv, True, error=str(e)
                             )
-        return pd.DataFrame(out)
-
-    return _run
-
-
-def extract_validate_udf(
-    templates: dict[str, dict], schemas_conf: dict[str, dict]
-):
-    """(all_text, doc_type, confidence) -> struct(fields, validation).
-
-    schemas_conf is the raw JSON dict form (picklable); ValidationSchema
-    objects are rebuilt per worker. Rows without an auto-selected template
-    get fields={} and validation=null (reference: no template -> no
-    extraction -> nothing to validate)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(_EXTRACT_VALIDATE_TYPE)
-    def _run(all_text, doc_type, confidence):
-        import pandas as pd
-
-        from ..config import FieldSchema as FS
-        from ..config import ValidationSchema as VS
-        from ..oracle.extract import _field_to_string
-        from ..oracle.template import extract_template_fields
-        from ..oracle.validator import validate_data
-
-        schemas = {}
-        for name, data in schemas_conf.items():
-            schemas[name] = VS(
-                name=name,
-                fields={
-                    fn: FS(
-                        type=f.get("type", "string"),
-                        required=bool(f.get("required", False)),
-                        severity=f.get("severity", "error"),
-                        options=f.get("options", {}) or {},
-                    )
-                    for fn, f in data.get("fields", {}).items()
-                },
-                strict=bool(data.get("strict", False)),
-                custom_validations=tuple(data.get("custom_validations", ())),
-            )
-
-        out = []
-        for text, dt, conf in zip(all_text, doc_type, confidence):
-            tpl = templates.get(dt) if dt is not None else None
-            if (
-                tpl is None
-                or text is None
-                or conf is None
-                or conf <= AUTO_TEMPLATE_MIN_CONFIDENCE
-            ):
-                out.append({"fields": {}, "validation": None})
-                continue
-            fields = extract_template_fields(text, tpl)
-            schema = schemas.get(f"{dt}_schema")
-            validation = None
-            if schema is not None:
-                v = validate_data(fields, schema)
-                validation = {
-                    "valid": v["valid"],
-                    "errors": v["errors"],
-                    "warnings": v["warnings"],
-                }
-            out.append(
-                {
-                    "fields": {k: _field_to_string(v) for k, v in fields.items()},
-                    "validation": validation,
-                }
-            )
         return pd.DataFrame(out)
 
     return _run

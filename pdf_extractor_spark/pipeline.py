@@ -3,7 +3,7 @@ with explicit doc_id hash bucketing, skew salting, per-bucket checkpointing
 to the lakehouse (parquet locally, Iceberg on a cluster — see sinks.py), a
 per-doc metrics/lineage table, and idempotent resume (north_rule).
 
-Scale design (for a 1000-executor / 10^12-doc cluster, tested on local[32]):
+Scale design (for a 1000-executor / 10^12-doc cluster; measured on local[4]):
   * documents are hash-bucketed on xxhash64(doc_id) % num_buckets — the unit
     of checkpointing, resume, and output partitioning.
   * within a bucket, a salt (xxhash64(doc_id) % salts) spreads rows across
@@ -11,9 +11,9 @@ Scale design (for a 1000-executor / 10^12-doc cluster, tested on local[32]):
     tail) does not serialize on one task; Arrow batch size is bounded in
     session.py so a batch of whales fits in worker memory.
   * the whole flow is one narrow pipeline per row (no joins, no aggregation
-    until metrics), so the ONLY shuffle is the explicit repartition on
-    (bucket, salt). Partial (map-side) aggregation computes the per-bucket
-    metric rollups.
+    until metrics), so each wave has ONE shuffle: place_wave's
+    bucket-aligned placement of (bucket, salt) keys, which writes at most
+    W + n files per table for a wave of W buckets over n tasks.
   * waves: buckets are processed in `waves` groups; each wave commits its
     output partitions + metrics before the next starts, so a failed run
     resumes at wave granularity by anti-joining completed buckets from the
@@ -127,6 +127,26 @@ def write_bucketed_input(
     ).write.mode("overwrite").partitionBy("bucket").parquet(path)
 
 
+def place_wave(
+    df: DataFrame, wave_buckets: list[int], salts: int, num_partitions: int
+) -> DataFrame:
+    """The wave's one shuffle: each task gets a contiguous run of
+    (bucket, salt) keys. A key's position in the wave is
+    rank(bucket) * salts + salt, where rank is the bucket's index in
+    wave_buckets (so a resumed wave with gaps stays balanced), and the
+    W * salts keys are cut into num_partitions equal runs. A key never
+    splits, key counts per task differ by at most 1, and a task spans
+    ~W / num_partitions bucket directories instead of all W, so the
+    partitioned write opens at most W + num_partitions files per table."""
+    keys = len(wave_buckets) * salts
+    buckets = ", ".join(str(b) for b in wave_buckets)
+    pid = F.expr(
+        f"CAST(((array_position(array({buckets}), bucket) - 1) * {salts}"
+        f" + salt) * {num_partitions} div {keys} AS INT)"
+    )
+    return df.repartitionById(num_partitions, pid)
+
+
 def metrics_rows(extracted: DataFrame, run_id: str, wave: int) -> DataFrame:
     """Per-doc metrics/lineage record (FIXTURES.md §4; analytics.py:154-216
     record shape + our lineage extensions)."""
@@ -201,9 +221,10 @@ def run_pipeline(
         ]
         if not wave_buckets:
             continue
-        subset = bucketed.filter(F.col("bucket").isin(wave_buckets))
-        # explicit co-location + skew spread: one shuffle on (bucket, salt)
-        subset = subset.repartition(shuffle_n, "bucket", "salt")
+        subset = place_wave(
+            bucketed.filter(F.col("bucket").isin(wave_buckets)),
+            wave_buckets, salts, shuffle_n,
+        )
         stage = (
             transform
             if transform is not None

@@ -95,3 +95,19 @@ def test_lsh_bands_sweep_matches_single_eval(spark):
     }
     ev = lsh_candidate_eval(docs).first()
     assert sweep[(4, 4)] == (ev.n_candidates, ev.n_truth, ev.true_pairs)
+
+
+@pytest.mark.parametrize(
+    "kwargs, msg",
+    [
+        ({"layouts": []}, "must not be empty"),
+        ({"layouts": [(4, 4), (4, 8)]}, r"layout \(4, 8\)"),
+        ({"num_hashes": 8, "layouts": [(4, 4)]}, "num_hashes=8"),
+    ],
+)
+def test_lsh_bands_sweep_rejects_bad_layouts_at_entry(spark, kwargs, msg):
+    # rejected before any Spark job: a bad layout used to fail late, on an
+    # unresolved signature column or None.orderBy
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=msg):
+        lsh_bands_sweep(docs, **kwargs)
