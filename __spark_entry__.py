@@ -2,20 +2,21 @@
 
 entry(spark)   — flagship: the full extract->classify->validate pipeline on a
                  spans corpus derived from sf0.001 documents.
-queries()      — one entry per implemented operator family (SURVEY.md §2 +
-                 the training-data operator set); each takes (spark, sf_dir).
-oracle_sql()   — DuckDB-runnable ANSI SQL mirrors. Round 2: EVERY query has
-                 an oracle except extract_pipeline (pandas-UDF pipeline,
-                 covered by span-sequence-parity pytest) — the LSH families
-                 are mirrored via md5-derived hashes/planes re-computed in
-                 SQL, the ANN rerank via a sequential-fold dot product, and
+queries()      — every query of CATALOG, the family-grouped table that is the
+                 one place a query is declared; each takes (spark, sf_dir).
+oracle_sql()   — DuckDB-runnable ANSI SQL mirrors. Every query has an oracle
+                 except extract_pipeline (pandas-UDF pipeline, covered by
+                 span-sequence-parity pytest) — the LSH families are
+                 mirrored via md5-derived hashes/planes re-computed in SQL,
+                 the ANN rerank via a sequential-fold dot product, and
                  clustering via a recursive reachability CTE.
 
 Column names are aliased identically on both sides; float columns are rounded
 (4-6 dp) in BOTH engines so order-of-summation noise cannot flip the value
 hash; integer aggregates are CAST to BIGINT (DuckDB HUGEINT would hash as
 float64); vector math mirrors Spark's fold order exactly (see _seq_dot).
-All 68 SQL-checked queries pass at sf0.001, sf0.01, AND sf0.1.
+OPERATORS.md (generated from CATALOG) carries the live query and oracle
+counts.
 """
 
 from __future__ import annotations
@@ -83,6 +84,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _success(spark, sf_dir):
+    """Batch success rate over the analytics log (dashboard batch report)."""
     from pdf_extractor_spark.operators.analytics import success_rate
 
     ev = _t(spark, sf_dir, "events")
@@ -90,6 +92,7 @@ def _success(spark, sf_dir):
 
 
 def _kpis(spark, sf_dir):
+    """The dashboard's 4-cell KPI row: total / success / today / avg processing time."""
     from pdf_extractor_spark.operators.analytics import kpis
 
     ev = _t(spark, sf_dir, "events")
@@ -100,18 +103,21 @@ def _kpis(spark, sf_dir):
 
 
 def _count_by_type(spark, sf_dir):
+    """Event count per type (dashboard bar chart)."""
     from pdf_extractor_spark.operators.analytics import count_by_type
 
     return count_by_type(_t(spark, sf_dir, "events"), type_col="event_type")
 
 
 def _distinct_types(spark, sf_dir):
+    """Distinct event types, sorted."""
     from pdf_extractor_spark.operators.analytics import distinct_types
 
     return distinct_types(_t(spark, sf_dir, "events"), type_col="event_type")
 
 
 def _avg_purchase(spark, sf_dir):
+    """Average value of purchase events."""
     from pdf_extractor_spark.operators.analytics import avg_confidence
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
@@ -121,6 +127,7 @@ def _avg_purchase(spark, sf_dir):
 
 
 def _count_by_date(spark, sf_dir):
+    """Events per calendar day."""
     from pdf_extractor_spark.operators.analytics import count_by_date
 
     out = count_by_date(_t(spark, sf_dir, "events"), ts_col="ts")
@@ -128,6 +135,7 @@ def _count_by_date(spark, sf_dir):
 
 
 def _densified(spark, sf_dir):
+    """Daily counts densified over the full date range (zero-filled gaps)."""
     from pdf_extractor_spark.operators.analytics import densified_daily_counts
 
     out = densified_daily_counts(
@@ -137,6 +145,7 @@ def _densified(spark, sf_dir):
 
 
 def _filtered_range(spark, sf_dir):
+    """Events in a timestamp range with a type filter (pushdown-checked)."""
     from pdf_extractor_spark.operators.analytics import filtered
 
     ev = _t(spark, sf_dir, "events")
@@ -147,6 +156,7 @@ def _filtered_range(spark, sf_dir):
 
 
 def _top_error_props(spark, sf_dir):
+    """Most common error properties (top-k with deterministic ties)."""
     from pdf_extractor_spark.operators.analytics import top_k
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "error")
@@ -155,6 +165,7 @@ def _top_error_props(spark, sf_dir):
 
 
 def _recent_events(spark, sf_dir):
+    """Most recent N events (TakeOrderedAndProject)."""
     from pdf_extractor_spark.operators.analytics import most_recent
 
     ev = _t(spark, sf_dir, "events").select(
@@ -164,6 +175,7 @@ def _recent_events(spark, sf_dir):
 
 
 def _grouped_mean(spark, sf_dir):
+    """Mean event value per type (batch report row)."""
     from pdf_extractor_spark.operators.analytics import grouped_mean
 
     return grouped_mean(
@@ -172,6 +184,7 @@ def _grouped_mean(spark, sf_dir):
 
 
 def _user_top_event(spark, sf_dir):
+    """Each user's most frequent event type (per-user window argmax)."""
     from pyspark.sql import Window
 
     ev = _t(spark, sf_dir, "events")
@@ -184,6 +197,7 @@ def _user_top_event(spark, sf_dir):
 
 
 def _tpch_q1(spark, sf_dir):
+    """TPC-H Q1 pricing summary: the canonical wide partial-agg scan."""
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
     return (
         li.groupBy("l_returnflag", "l_linestatus")
@@ -202,6 +216,7 @@ def _tpch_q1(spark, sf_dir):
 
 
 def _top_revenue_orders(spark, sf_dir):
+    """Top orders by lineitem revenue (join + agg + top-k)."""
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     rev = (
@@ -221,6 +236,7 @@ def _top_revenue_orders(spark, sf_dir):
 
 
 def _customers_per_region(spark, sf_dir):
+    """Customer counts rolled up region<-nation (broadcast dims)."""
     cust = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
     region = _t(spark, sf_dir, "region")
@@ -237,6 +253,7 @@ def _customers_per_region(spark, sf_dir):
 
 
 def _tpch_q6(spark, sf_dir):
+    """TPC-H Q6 forecast revenue: pure scan-filter-agg (pushdown showcase)."""
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -255,6 +272,7 @@ def _tpch_q6(spark, sf_dir):
 
 
 def _tpch_q3(spark, sf_dir):
+    """TPC-H Q3 shipping priority: 3-way join + top-k revenue."""
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1997-03-15")
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1997-03-15")
@@ -277,6 +295,7 @@ def _tpch_q3(spark, sf_dir):
 
 
 def _tpch_q5(spark, sf_dir):
+    """TPC-H Q5 local supplier volume: 6-way join, broadcast dims."""
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
@@ -379,6 +398,7 @@ def _classify_rules(spark, sf_dir):
 
 
 def _preprocess_text(spark, sf_dir):
+    """Reference text preprocessing (Python whitespace-class parity, lowercase)."""
     from pdf_extractor_spark.operators.spans import preprocess_text
 
     docs = _t(spark, sf_dir, "documents")
@@ -388,6 +408,7 @@ def _preprocess_text(spark, sf_dir):
 
 
 def _lang_name(spark, sf_dir):
+    """Language code -> display name lookup (reference language map)."""
     from pdf_extractor_spark.operators.spans import language_name_col
 
     docs = _t(spark, sf_dir, "documents")
@@ -395,6 +416,7 @@ def _lang_name(spark, sf_dir):
 
 
 def _token_count(spark, sf_dir):
+    """Whitespace token count per document, fully columnar."""
     from pdf_extractor_spark.operators.textstats import token_count
 
     docs = _t(spark, sf_dir, "documents")
@@ -402,6 +424,7 @@ def _token_count(spark, sf_dir):
 
 
 def _bpe_token_count(spark, sf_dir):
+    """BPE-ish subword count via the reference regex, columnar."""
     from pdf_extractor_spark.operators.textstats import bpe_token_count
 
     docs = _t(spark, sf_dir, "documents")
@@ -409,6 +432,7 @@ def _bpe_token_count(spark, sf_dir):
 
 
 def _quality(spark, sf_dir):
+    """Length/stopword/punct/digit quality score per document."""
     from pdf_extractor_spark.operators.textstats import add_quality_score
 
     docs = _t(spark, sf_dir, "documents")
@@ -416,6 +440,7 @@ def _quality(spark, sf_dir):
 
 
 def _lang_id(spark, sf_dir):
+    """N-gram heuristic language identification, columnar (no UDF)."""
     from pdf_extractor_spark.operators.textstats import add_lang_id
 
     docs = _t(spark, sf_dir, "documents")
@@ -423,12 +448,14 @@ def _lang_id(spark, sf_dir):
 
 
 def _repetition_stats(spark, sf_dir):
+    """Gopher-style repetition stats: dup-unigram fraction, top-bigram share."""
     from pdf_extractor_spark.operators.textstats import repetition_stats
 
     return repetition_stats(_t(spark, sf_dir, "documents"))
 
 
 def _tfidf_top_terms(spark, sf_dir):
+    """Per-doc top TF-IDF terms (corpus df join + per-doc window top-k)."""
     from pdf_extractor_spark.operators.textstats import tfidf_top_terms
 
     return tfidf_top_terms(_t(spark, sf_dir, "documents"), k=3)
@@ -443,6 +470,7 @@ def _bm25_topk(spark, sf_dir):
 
 
 def _fingerprint(spark, sf_dir):
+    """Rolling-hash document fingerprint (integer arithmetic, columnar)."""
     from pdf_extractor_spark.operators.textstats import fingerprint
 
     docs = _t(spark, sf_dir, "documents")
@@ -450,12 +478,14 @@ def _fingerprint(spark, sf_dir):
 
 
 def _exact_dedup(spark, sf_dir):
+    """Exact duplicate groups by text digest (digest-first shuffle)."""
     from pdf_extractor_spark.operators.dedup import exact_dedup
 
     return exact_dedup(_t(spark, sf_dir, "documents"))
 
 
 def _ngram_jaccard(spark, sf_dir):
+    """Exact n-gram Jaccard similarity pairs via shingle inverted index."""
     from pdf_extractor_spark.operators.dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(
@@ -587,6 +617,7 @@ def _neardup_clusters(spark, sf_dir):
 
 
 def _cosine_topk(spark, sf_dir):
+    """Exact brute-force cosine top-k (the ANN recall baseline)."""
     from pdf_extractor_spark.operators.similarity import cosine_topk
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -670,6 +701,7 @@ def _script_mix(spark, sf_dir):
 
 
 def _lsh_ann(spark, sf_dir):
+    """Random-hyperplane LSH bucketed ANN top-k."""
     from pdf_extractor_spark.operators.similarity import lsh_topk
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -681,6 +713,7 @@ _IVF_CENTROID_CACHE: dict = {}
 
 
 def _ivf_ann(spark, sf_dir):
+    """IVF coarse-quantizer ANN top-k with precomputed centroids."""
     from pdf_extractor_spark.operators.similarity import ivf_centroids, ivf_topk
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -937,6 +970,7 @@ def _augmented_embeddings(spark, sf_dir):
 
 
 def _embedding_neardup(spark, sf_dir):
+    """Embedding near-duplicate pairs blocked by LSH bucket."""
     from pdf_extractor_spark.operators.dedup import embedding_neardup_pairs
 
     return embedding_neardup_pairs(
@@ -2577,6 +2611,7 @@ def _media_phash_neardup(spark, sf_dir):
 
 
 def _media_meta(spark, sf_dir):
+    """Typed metadata projection over the interleaved media table."""
     from pdf_extractor_spark.operators.multimodal import media_from_documents
 
     media = media_from_documents(_t(spark, sf_dir, "documents"))
@@ -2631,6 +2666,7 @@ def _media_mime_sniff(spark, sf_dir):
 
 
 def _media_features(spark, sf_dir):
+    """mapInPandas decode+featurize plumbing (stubbed kernel, real batches)."""
     from pdf_extractor_spark.operators.multimodal import (
         extract_media_features,
         media_from_documents,
@@ -2679,6 +2715,7 @@ def _media_resize(spark, sf_dir):
 
 
 def _frame_sample(spark, sf_dir):
+    """Every-nth frame sampling via explode of a frame sequence."""
     from pdf_extractor_spark.operators.multimodal import (
         media_from_documents,
         sample_frames,
@@ -2689,6 +2726,8 @@ def _frame_sample(spark, sf_dir):
 
 
 def _extract_pipeline(spark, sf_dir):
+    """The flagship end-to-end extract->classify->validate pipeline (rows-only;
+    span-parity pytest)."""
     from pdf_extractor_spark.pipeline import extract_documents
     from pdf_extractor_spark.sources.corpus import corpus_from_documents_table
 
@@ -4482,6 +4521,7 @@ def _nfc_normalize(spark, sf_dir):
 
 
 def _token_entropy(spark, sf_dir):
+    """Per-doc Shannon entropy of the unigram distribution."""
     from pdf_extractor_spark.operators.curation import token_entropy
 
     return token_entropy(_t_wide(spark, sf_dir, "documents"))
@@ -4729,6 +4769,7 @@ def _synth_urls(spark, sf_dir):
 
 
 def _url_normalize(spark, sf_dir):
+    """URL canonicalization: scheme/host case, ports, utm_*, fragments."""
     from pdf_extractor_spark.operators.urls import url_normalize
 
     return url_normalize(_synth_urls(spark, sf_dir))
@@ -4815,6 +4856,7 @@ def _url_dedup(spark, sf_dir):
 
 
 def _host_stats(spark, sf_dir):
+    """Per-host rollups over normalized URLs (partial-agg heavy hitters)."""
     from pdf_extractor_spark.operators.urls import host_stats
 
     return host_stats(_synth_urls(spark, sf_dir))
@@ -5730,9 +5772,11 @@ def _community_conductance(spark, sf_dir):
     return community_conductance(edges, iters=2)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # §2.7 analytics operators
+# The query catalog: family title -> {query name: wrapper}. This is the
+# one place a query is declared; queries(), bench.HEADLINE and the
+# OPERATORS.md families are all derived from it.
+CATALOG: dict[str, dict[str, Callable[[SparkSession, str], DataFrame]]] = {
+    "Reference analytics (dashboard §2.7)": {
         "success_rate": _success,
         "kpis": _kpis,
         "count_by_type": _count_by_type,
@@ -5745,13 +5789,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "recent_events": _recent_events,
         "grouped_mean_value": _grouped_mean,
         "user_top_event": _user_top_event,
-        # relational core
+        "avg_time_tiers": _avg_time_tiers,
+    },
+    "Relational core (TPC-H adapted + joins)": {
         "tpch_q1": _tpch_q1,
+        "tpch_q2": _tpch_q2,
         "tpch_q3": _tpch_q3,
         "tpch_q4": _tpch_q4,
         "tpch_q5": _tpch_q5,
         "tpch_q6": _tpch_q6,
-        "tpch_q2": _tpch_q2,
         "tpch_q7": _tpch_q7,
         "tpch_q8": _tpch_q8,
         "tpch_q9": _tpch_q9,
@@ -5770,234 +5816,149 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_q22": _tpch_q22,
         "top_revenue_orders": _top_revenue_orders,
         "customers_per_region": _customers_per_region,
-        # extraction-domain operators (columnar twins of pipeline stages)
+    },
+    "Extraction / classification / validation (reference parity)": {
+        "extract_pipeline": _extract_pipeline,
+        "extract_pipeline_digest": _extract_pipeline_digest,
         "classify_rules": _classify_rules,
         "preprocess_text": _preprocess_text,
         "lang_name": _lang_name,
-        # text analysis
-        "token_count": _token_count,
+        "span_validations": _span_validations,
+        "auto_repair": _auto_repair,
+        "table_match": _table_match,
+        "page_filter": _page_filter,
+        "span_regression": _span_regression,
         "nfc_normalize": _nfc_normalize,
+    },
+    "Text statistics & quality": {
+        "token_count": _token_count,
         "bpe_token_count": _bpe_token_count,
         "quality_score": _quality,
         "lang_id": _lang_id,
         "fingerprint": _fingerprint,
         "repetition_stats": _repetition_stats,
         "tfidf_top_terms": _tfidf_top_terms,
-        "bm25_topk": _bm25_topk,
-        "phrase_search": _phrase_search,
-        # dedup
-        "exact_dedup": _exact_dedup,
-        "ngram_jaccard": _ngram_jaccard,
-        "winnow_fingerprints": _winnow_fingerprints,
-        "winnow_pairs": _winnow_pairs,
-        "minhash_lsh": _minhash_lsh,
-        "neardup_clusters": _neardup_clusters,
-        "dedup_survivors": _dedup_survivors,
-        "dedup_apply": _dedup_apply,
-        "simhash_neardup": _simhash,
-        # corpus curation
-        "dup_ngram_stats": _dup_ngram_stats,
-        "ngram_novelty": _ngram_novelty,
-        "containment_pairs": _containment_pairs,
-        "intra_doc_dedup": _intra_doc_dedup,
-        "url_blocklist": _url_blocklist,
-        "crawl_schedule": _crawl_schedule,
-        "host_boilerplate": _host_boilerplate,
-        "tokenizer_fertility": _tokenizer_fertility,
-        "source_similarity": _source_similarity,
-        "source_similarity_kmv": _source_similarity_kmv,
-        "lang_alpha_weights": _lang_alpha_weights,
-        "corpus_digest": _corpus_digest,
-        "readability": _readability,
-        "decontaminate": _decontaminate,
-        "decontaminate_near": _decontaminate_near,
         "token_entropy": _token_entropy,
         "bpe_pair_counts": _bpe_pair_counts,
         "bpe_merges": _bpe_merges,
         "bpe_encode": _bpe_encode,
         "bpe_vocab": _bpe_vocab,
+        "wordpiece_encode": _wordpiece_encode,
+        "lattice_vocab": _lattice_vocab,
+        "lattice_encode": _lattice_encode,
         "pmi_cooccurrence": _pmi_cooccurrence,
-        "line_dedup": _line_dedup,
-        "substring_dedup": _substring_dedup,
-        "stratified_sample": _stratified_sample,
-        "corpus_rollup": _corpus_rollup,
-        "funnel_conversion": _funnel_conversion,
-        "retention_cohorts": _retention_cohorts,
-        "key_skew_stats": _key_skew_stats,
-        "salted_join": _salted_join,
-        "pii_scrub": _pii_scrub,
-        "url_normalize": _url_normalize,
-        "robots_rules": _robots_rules,
-        "url_dedup": _url_dedup,
-        "host_stats": _host_stats,
-        "mix_weights": _mix_weights,
-        "epoch_plan": _epoch_plan,
-        "global_shuffle": _global_shuffle,
         "lm_perplexity": _lm_perplexity,
         "ngram_lm": _ngram_lm,
         "kn_bigram_lm": _kn_bigram_lm,
         "kn_perplexity": _kn_perplexity,
         "stupid_backoff_score": _stupid_backoff_score,
         "quality_tiers": _quality_tiers,
-        "vocab_coverage": _vocab_coverage,
-        "pagerank_hosts": _pagerank_hosts,
-        "crawl_frontier": _crawl_frontier,
-        "triangle_hosts": _triangle_hosts,
         "gopher_filter": _gopher_filter,
         "c4_filter": _c4_filter,
         "hash_lr": _hash_lr,
+        "train_hash_lr": _train_hash_lr,
+        "hash_lr_trained": _hash_lr_trained,
+        "model_accuracy": _model_accuracy,
+        "roc_auc": _roc_auc,
+        "curriculum_order": _curriculum_order,
+        "packing_efficiency": _packing_efficiency,
         "calibration_bins": _calibration_bins,
         "entity_mentions": _entity_mentions,
-        "k_anonymity": _k_anonymity,
-        "wordpiece_encode": _wordpiece_encode,
-        "dataset_split": _dataset_split,
-        "pareto_frontier": _pareto_frontier,
+        "vocab_coverage": _vocab_coverage,
+        "readability": _readability,
+        "tokenizer_fertility": _tokenizer_fertility,
+        "ocr_garble_score": _ocr_garble,
+        "script_mix": _script_mix,
+        "sentence_segment": _sentence_segment,
+        "quality_percentile": _quality_percentile,
+        "vocab_prune": _vocab_prune,
+        "lang_confusion": _lang_confusion,
         "zipf_fit": _zipf_fit,
         "heaps_law": _heaps_law,
         "word_burstiness": _word_burstiness,
-        "ab_test": _ab_test,
-        "dow_seasonality": _dow_seasonality,
-        "event_transitions": _event_transitions,
-        "attribution_credit": _attribution_credit,
-        "decayed_activity": _decayed_activity,
-        "dehyphenate": _dehyphenate,
-        "header_footer_strip": _header_footer_strip,
-        "quality_percentile": _quality_percentile,
-        "section_split": _section_split,
-        "keyword_rake": _keyword_rake,
-        "reverse_search": _reverse_search,
-        "sentence_segment": _sentence_segment,
-        "badword_filter": _badword_filter,
-        "assoc_rules": _assoc_rules,
-        "quote_extract": _quote_extract,
-        "sample_alloc": _sample_alloc,
-        "time_to_convert": _time_to_convert,
-        "luhn_scan": _luhn_scan,
-        "cusum_changepoint": _cusum_changepoint,
-        "event_paths": _event_paths,
-        "rfm_segments": _rfm_segments,
-        "span_interleave_stats": _span_interleave_stats,
-        "media_ref_integrity": _media_ref_integrity,
-        "toc_extract": _toc_extract,
-        "footnote_link": _footnote_link,
-        "acronym_extract": _acronym_extract,
-        "unit_normalize": _unit_normalize,
-        "list_detect": _list_detect,
-        "column_conformance": _column_conformance,
-        "zone_map_prune": _zone_map_prune,
-        "lang_confusion": _lang_confusion,
-        "bot_detect": _bot_detect,
-        "centroid_drift": _centroid_drift,
+        "gt_unseen_mass": _gt_unseen_mass,
+        "yule_k": _yule_k,
         "stylometry_delta": _stylometry_delta,
         "source_diversity": _source_diversity,
-        "autocomplete_prefix": _autocomplete_prefix,
-        "anomaly_mad": _anomaly_mad,
-        "table_column_types": _table_column_types,
-        "vocab_prune": _vocab_prune,
-        "value_histogram": _value_histogram,
-        "link_reciprocity": _link_reciprocity,
-        "label_propagation": _label_propagation,
-        "cc_hosts": _cc_hosts,
-        "cc_incremental": _cc_incremental,
-        "adamic_adar": _adamic_adar,
-        "degree_assortativity": _degree_assortativity,
-        "graph_modularity": _graph_modularity,
-        "gt_unseen_mass": _gt_unseen_mass,
-        "lsh_candidate_eval": _lsh_candidate_eval,
-        "clustering_coefficient": _clustering_coefficient,
-        "yule_k": _yule_k,
-        "lsh_bands_sweep": _lsh_bands_sweep,
-        "simhash_hamming_curve": _simhash_hamming_curve,
-        "community_conductance": _community_conductance,
-        "expire_snapshots": _expire_snapshots,
         "text_tiling": _text_tiling,
-        "event_rle": _event_rle,
-        "levenshtein_names": _levenshtein_names,
-        "phonetic_groups": _phonetic_groups,
-        "cdc_chunk_dedup": _cdc_chunk_dedup,
-        "rouge_overlap": _rouge_overlap,
-        "dau_wau_stickiness": _dau_wau_stickiness,
-        "gini_value": _gini_value,
-        "user_entropy": _user_entropy,
-        "ewma_daily": _ewma_daily,
-        "hits_hosts": _hits_hosts,
-        "degree_ccdf": _degree_ccdf,
-        "shot_boundaries": _shot_boundaries,
-        "events_cube": _events_cube,
-        "concordance": _concordance,
-        "branching_entropy": _branching_entropy,
-        "kmv_setops": _kmv_setops,
-        "seasonal_decompose": _seasonal_decompose,
-        "order_deciles": _order_deciles,
-        "part_affinity": _part_affinity,
-        "collocations_llr": _collocations_llr,
-        "embedding_quantile_norm": _embedding_quantile_norm,
-        "churn_detect": _churn_detect,
-        "robust_value_stats": _robust_value_stats,
-        "pca_top_component": _pca_top_component,
-        "filter_kappa": _filter_kappa,
-        "lang_source_mi": _lang_source_mi,
-        "kcore_hosts": _kcore_hosts,
-        "user_tier_enrich": _user_tier_enrich,
-        "wow_growth": _wow_growth,
-        "shipping_delay_stats": _shipping_delay_stats,
-        "discount_revenue_curve": _discount_revenue_curve,
-        "image_tiles": _image_tiles,
-        "token_length_hist": _token_length_hist,
-        "utf8_stats": _utf8_stats,
-        "interarrival_hist": _interarrival_hist,
-        "host_outlink_jaccard": _host_outlink_jaccard,
-        "cluster_purity": _cluster_purity,
-        "regional_top_parts": _regional_top_parts,
-        "null_profile": _null_profile,
-        "benford_deviation": _benford_deviation,
-        "dedup_audit_pairs": _dedup_audit_pairs,
-        "bootstrap_ci": _bootstrap_ci,
-        "dp_counts": _dp_counts,
-        "join_size_estimate": _join_size_estimate,
-        "morph_split": _morph_split,
-        "numeric_profile": _numeric_profile,
-        "linkage_scores": _linkage_scores,
-        "ndcg_topk": _ndcg_topk,
-        "rank_biased_overlap": _rank_biased_overlap,
-        "pps_sample": _pps_sample,
-        "weighted_sample": _weighted_sample,
-        "markov_stationary": _markov_stationary,
-        "kaplan_meier": _kaplan_meier,
-        "ks_test": _ks_test,
-        "psi_drift": _psi_drift,
-        "dup_rate_by_source": _dup_rate_by_source,
-        "corr_matrix": _corr_matrix,
-        "filter_committee": _filter_committee,
-        "embedding_isotropy": _embedding_isotropy,
-        "dow_hour_heatmap": _dow_hour_heatmap,
-        "abtt_transform": _abtt_transform,
-        "hashed_doc_embedding": _hashed_doc_embedding,
-        "ppr_hosts": _ppr_hosts,
-        "autocorrelation": _autocorrelation,
-        "rrf_fusion": _rrf_fusion,
-        "event_trigrams": _event_trigrams,
-        "encoding_advisor": _encoding_advisor,
-        "doc_similar_topk": _doc_similar_topk,
-        "cluster_size_hist": _cluster_size_hist,
-        "dedup_threshold_curve": _dedup_threshold_curve,
-        "source_trend": _source_trend,
-        "dispersion_index": _dispersion_index,
-        "capture_recapture": _capture_recapture,
-        "query_likelihood": _query_likelihood,
-        "markov_entropy_rate": _markov_entropy_rate,
-        "filter_pr": _filter_pr,
-        "span_kind_transitions": _span_kind_transitions,
-        "curation_funnel": _curation_funnel,
+    },
+    "Document structure (layout cleanup & mining)": {
+        "dehyphenate": _dehyphenate,
+        "header_footer_strip": _header_footer_strip,
+        "section_split": _section_split,
+        "quote_extract": _quote_extract,
+        "toc_extract": _toc_extract,
+        "footnote_link": _footnote_link,
+        "list_detect": _list_detect,
+        "table_column_types": _table_column_types,
+        "acronym_extract": _acronym_extract,
+        "unit_normalize": _unit_normalize,
+    },
+    "Keywords & search": {
+        "keyword_rake": _keyword_rake,
+        "reverse_search": _reverse_search,
+        "assoc_rules": _assoc_rules,
+        "autocomplete_prefix": _autocomplete_prefix,
+    },
+    "Deduplication": {
+        "exact_dedup": _exact_dedup,
+        "line_dedup": _line_dedup,
+        "substring_dedup": _substring_dedup,
+        "ngram_jaccard": _ngram_jaccard,
+        "winnow_fingerprints": _winnow_fingerprints,
+        "winnow_pairs": _winnow_pairs,
+        "minhash_lsh": _minhash_lsh,
+        "simhash_neardup": _simhash,
+        "neardup_clusters": _neardup_clusters,
+        "dedup_survivors": _dedup_survivors,
+        "dedup_apply": _dedup_apply,
+        "dup_ngram_stats": _dup_ngram_stats,
         "incremental_dedup": _incremental_dedup,
         "incremental_lsh_dedup": _incremental_lsh_dedup,
-        # similarity search
+        "embedding_neardup": _embedding_neardup,
+        "semdedup": _semdedup,
+        "containment_pairs": _containment_pairs,
+        "intra_doc_dedup": _intra_doc_dedup,
+        "ngram_novelty": _ngram_novelty,
+        "cluster_size_hist": _cluster_size_hist,
+        "dedup_threshold_curve": _dedup_threshold_curve,
+        "lsh_candidate_eval": _lsh_candidate_eval,
+        "lsh_bands_sweep": _lsh_bands_sweep,
+        "simhash_hamming_curve": _simhash_hamming_curve,
+    },
+    "Decontamination & corpus curation": {
+        "decontaminate": _decontaminate,
+        "decontaminate_near": _decontaminate_near,
+        "pii_scrub": _pii_scrub,
+        "k_anonymity": _k_anonymity,
+        "mix_weights": _mix_weights,
+        "epoch_plan": _epoch_plan,
+        "global_shuffle": _global_shuffle,
+        "hash_sample": _hash_sample,
+        "host_quota_sample": _host_quota_sample,
+        "curation_funnel": _curation_funnel,
+        "chunk_documents": _chunk_documents,
+        "pack_sequences": _pack_sequences,
+        "bloom_decontaminate": _bloom_decontaminate,
+        "stratified_sample": _stratified_sample,
+        "corpus_rollup": _corpus_rollup,
+        "dsir_weights": _dsir_weights,
+        "source_similarity": _source_similarity,
+        "source_similarity_kmv": _source_similarity_kmv,
+        "lang_alpha_weights": _lang_alpha_weights,
+        "corpus_digest": _corpus_digest,
+        "host_boilerplate": _host_boilerplate,
+        "dataset_split": _dataset_split,
+        "pareto_frontier": _pareto_frontier,
+        "sample_alloc": _sample_alloc,
+        "badword_filter": _badword_filter,
+        "luhn_scan": _luhn_scan,
+    },
+    "Similarity search (ANN)": {
         "cosine_topk": _cosine_topk,
-        "hard_negatives": _hard_negatives,
-        "bitext_mine": _bitext_mine,
-        "embedding_outliers": _embedding_outliers,
-        "ocr_garble_score": _ocr_garble,
-        "script_mix": _script_mix,
+        "bm25_topk": _bm25_topk,
+        "query_likelihood": _query_likelihood,
+        "phrase_search": _phrase_search,
         "lsh_ann_topk": _lsh_ann,
         "ivf_ann_topk": _ivf_ann,
         "pq_encode": _pq_encode,
@@ -6008,78 +5969,199 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_recall_eval": _ann_recall_eval,
         "kmeans_clusters": _kmeans_clusters,
         "cluster_balanced_sample": _cluster_balanced_sample,
-        "embedding_neardup": _embedding_neardup,
-        "semdedup": _semdedup,
-        "avg_time_tiers": _avg_time_tiers,
-        "span_validations": _span_validations,
-        # validation auto-repair + template table matching
-        "auto_repair": _auto_repair,
-        "table_match": _table_match,
-        # multimodal plumbing
-        "page_filter": _page_filter,
-        "span_regression": _span_regression,
-        "text_tables": _text_tables,
-        "media_meta": _media_meta,
-        "media_mime_sniff": _media_mime_sniff,
-        "media_dedup": _media_dedup,
-        "media_phash": _media_phash,
-        "media_phash_neardup": _media_phash_neardup,
-        "media_captions": _media_captions,
-        "multimodal_pack": _multimodal_pack,
-        "media_resize": _media_resize,
-        "media_features": _media_features,
-        "audio_segments": _audio_segments,
-        "frame_sample": _frame_sample,
-        # full pipeline (pandas-UDF stages; rows-only check)
+        "embedding_quantize": _embedding_quantize,
+        "hard_negatives": _hard_negatives,
+        "bitext_mine": _bitext_mine,
+        "embedding_outliers": _embedding_outliers,
+        "centroid_drift": _centroid_drift,
+    },
+    "Web: HTML, URLs, link graph": {
         "html_main_content": _html_main_content,
         "html_blocks": _html_blocks,
         "html_links": _html_links,
         "anchor_text_index": _anchor_text_index,
-        "host_quota_sample": _host_quota_sample,
+        "url_normalize": _url_normalize,
+        "url_dedup": _url_dedup,
+        "host_stats": _host_stats,
+        "url_blocklist": _url_blocklist,
+        "robots_rules": _robots_rules,
+        "crawl_schedule": _crawl_schedule,
+        "pagerank_hosts": _pagerank_hosts,
+        "crawl_frontier": _crawl_frontier,
+        "triangle_hosts": _triangle_hosts,
+        "link_reciprocity": _link_reciprocity,
+        "label_propagation": _label_propagation,
+        "cc_hosts": _cc_hosts,
+        "cc_incremental": _cc_incremental,
+    },
+    "Layout (reading order)": {
         "layout_order": _layout_order,
         "layout_text": _layout_text,
+        "text_tables": _text_tables,
+    },
+    "Multimodal (interleaved media)": {
+        "media_meta": _media_meta,
+        "media_features": _media_features,
+        "media_resize": _media_resize,
+        "frame_sample": _frame_sample,
+        "audio_segments": _audio_segments,
+        "media_captions": _media_captions,
+        "multimodal_pack": _multimodal_pack,
+        "media_dedup": _media_dedup,
+        "media_mime_sniff": _media_mime_sniff,
+        "media_phash": _media_phash,
+        "media_phash_neardup": _media_phash_neardup,
+        "span_interleave_stats": _span_interleave_stats,
+        "span_kind_transitions": _span_kind_transitions,
+        "media_ref_integrity": _media_ref_integrity,
+    },
+    "Events: sessions, as-of, rollups, sketches": {
         "sessionize": _sessionize,
-        "resample_locf": _resample_locf,
         "asof_last_purchase": _asof_last_purchase,
-        "pack_sequences": _pack_sequences,
-        "chunk_documents": _chunk_documents,
-        "hash_sample": _hash_sample,
-        "moving_avg_daily": _moving_avg_daily,
-        "daily_anomaly": _daily_anomaly,
-        "approx_distinct_users": _approx_distinct_users,
+        "resample_locf": _resample_locf,
         "events_rollup": _events_rollup,
         "events_pivot": _events_pivot,
+        "range_join_windows": _range_join_windows,
+        "cms_user_counts": _cms_user_counts,
+        "click_not_purchase_users": _click_not_purchase_users,
+        "moving_avg_daily": _moving_avg_daily,
+        "daily_anomaly": _daily_anomaly,
         "value_quantiles": _value_quantiles,
         "approx_value_quantiles": _approx_value_quantiles,
-        "click_not_purchase_users": _click_not_purchase_users,
-        "range_join_windows": _range_join_windows,
+        "approx_distinct_users": _approx_distinct_users,
+        "hll_mergeable_users": _hll_mergeable_users,
+        "sample_quantile_sketch": _sample_quantile_sketch,
+        "heavy_hitters": _heavy_hitters,
+        "event_dedup": _event_dedup,
+        "props_variant_stats": _props_variant_stats,
+        "funnel_conversion": _funnel_conversion,
+        "retention_cohorts": _retention_cohorts,
+        "key_skew_stats": _key_skew_stats,
+        "salted_join": _salted_join,
+        "scd2_user_status": _scd2_user_status,
+        "ab_test": _ab_test,
+        "dow_seasonality": _dow_seasonality,
+        "event_transitions": _event_transitions,
+        "attribution_credit": _attribution_credit,
+        "decayed_activity": _decayed_activity,
+        "time_to_convert": _time_to_convert,
+        "cusum_changepoint": _cusum_changepoint,
+        "event_paths": _event_paths,
+        "rfm_segments": _rfm_segments,
+        "bot_detect": _bot_detect,
+        "anomaly_mad": _anomaly_mad,
+        "value_histogram": _value_histogram,
+        "event_rle": _event_rle,
+        "dow_hour_heatmap": _dow_hour_heatmap,
+    },
+    "Table layout & maintenance (Iceberg upkeep)": {
         "zorder_key": _zorder_key,
         "hilbert_key": _hilbert_key,
         "compaction_plan": _compaction_plan,
         "snapshot_diff": _snapshot_diff,
-        "dsir_weights": _dsir_weights,
-        "fuzzy_name_match": _fuzzy_name_match,
         "rendezvous_shards": _rendezvous_shards,
-        "heavy_hitters": _heavy_hitters,
-        "event_dedup": _event_dedup,
-        "props_variant_stats": _props_variant_stats,
-        "cms_user_counts": _cms_user_counts,
-        "embedding_quantize": _embedding_quantize,
-        "bloom_decontaminate": _bloom_decontaminate,
-        "scd2_user_status": _scd2_user_status,
-        "hll_mergeable_users": _hll_mergeable_users,
-        "sample_quantile_sketch": _sample_quantile_sketch,
-        "extract_pipeline": _extract_pipeline,
-        "extract_pipeline_digest": _extract_pipeline_digest,
-        "train_hash_lr": _train_hash_lr,
-        "hash_lr_trained": _hash_lr_trained,
-        "model_accuracy": _model_accuracy,
-        "roc_auc": _roc_auc,
-        "curriculum_order": _curriculum_order,
-        "packing_efficiency": _packing_efficiency,
-        "lattice_vocab": _lattice_vocab,
-        "lattice_encode": _lattice_encode,
-    }
+        "zone_map_prune": _zone_map_prune,
+        "column_conformance": _column_conformance,
+        "expire_snapshots": _expire_snapshots,
+        "encoding_advisor": _encoding_advisor,
+    },
+    "Fuzzy matching & record linkage": {
+        "levenshtein_names": _levenshtein_names,
+        "phonetic_groups": _phonetic_groups,
+        "linkage_scores": _linkage_scores,
+        "fuzzy_name_match": _fuzzy_name_match,
+    },
+    "Dedup extensions (CDC / overlap / audit)": {
+        "cdc_chunk_dedup": _cdc_chunk_dedup,
+        "rouge_overlap": _rouge_overlap,
+        "dedup_audit_pairs": _dedup_audit_pairs,
+        "dup_rate_by_source": _dup_rate_by_source,
+    },
+    "Engagement & robust statistics": {
+        "dau_wau_stickiness": _dau_wau_stickiness,
+        "gini_value": _gini_value,
+        "user_entropy": _user_entropy,
+        "ewma_daily": _ewma_daily,
+        "seasonal_decompose": _seasonal_decompose,
+        "churn_detect": _churn_detect,
+        "robust_value_stats": _robust_value_stats,
+        "wow_growth": _wow_growth,
+        "interarrival_hist": _interarrival_hist,
+        "bootstrap_ci": _bootstrap_ci,
+        "ks_test": _ks_test,
+        "psi_drift": _psi_drift,
+        "benford_deviation": _benford_deviation,
+        "dp_counts": _dp_counts,
+        "markov_stationary": _markov_stationary,
+        "kaplan_meier": _kaplan_meier,
+        "events_cube": _events_cube,
+        "autocorrelation": _autocorrelation,
+        "event_trigrams": _event_trigrams,
+        "source_trend": _source_trend,
+        "dispersion_index": _dispersion_index,
+        "capture_recapture": _capture_recapture,
+        "markov_entropy_rate": _markov_entropy_rate,
+    },
+    "Link-graph extensions": {
+        "hits_hosts": _hits_hosts,
+        "degree_ccdf": _degree_ccdf,
+        "kcore_hosts": _kcore_hosts,
+        "host_outlink_jaccard": _host_outlink_jaccard,
+        "ppr_hosts": _ppr_hosts,
+        "rrf_fusion": _rrf_fusion,
+        "rank_biased_overlap": _rank_biased_overlap,
+        "adamic_adar": _adamic_adar,
+        "degree_assortativity": _degree_assortativity,
+        "graph_modularity": _graph_modularity,
+        "clustering_coefficient": _clustering_coefficient,
+        "community_conductance": _community_conductance,
+    },
+    "Embedding & retrieval eval extensions": {
+        "embedding_quantile_norm": _embedding_quantile_norm,
+        "pca_top_component": _pca_top_component,
+        "cluster_purity": _cluster_purity,
+        "ndcg_topk": _ndcg_topk,
+        "kmv_setops": _kmv_setops,
+        "embedding_isotropy": _embedding_isotropy,
+        "abtt_transform": _abtt_transform,
+        "hashed_doc_embedding": _hashed_doc_embedding,
+        "doc_similar_topk": _doc_similar_topk,
+    },
+    "Corpus inspection & tokenizer extensions": {
+        "concordance": _concordance,
+        "branching_entropy": _branching_entropy,
+        "collocations_llr": _collocations_llr,
+        "morph_split": _morph_split,
+        "token_length_hist": _token_length_hist,
+        "utf8_stats": _utf8_stats,
+        "pps_sample": _pps_sample,
+        "weighted_sample": _weighted_sample,
+        "lang_source_mi": _lang_source_mi,
+        "filter_kappa": _filter_kappa,
+        "filter_committee": _filter_committee,
+        "filter_pr": _filter_pr,
+    },
+    "Relational & quality-audit extensions": {
+        "order_deciles": _order_deciles,
+        "part_affinity": _part_affinity,
+        "shipping_delay_stats": _shipping_delay_stats,
+        "discount_revenue_curve": _discount_revenue_curve,
+        "regional_top_parts": _regional_top_parts,
+        "null_profile": _null_profile,
+        "numeric_profile": _numeric_profile,
+        "join_size_estimate": _join_size_estimate,
+        "user_tier_enrich": _user_tier_enrich,
+        "corr_matrix": _corr_matrix,
+    },
+    "Multimodal extensions": {
+        "shot_boundaries": _shot_boundaries,
+        "image_tiles": _image_tiles,
+    },
+}
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {n: fn for family in CATALOG.values() for n, fn in family.items()}
 
 
 # ---------------------------------------------------------------------------

@@ -13,7 +13,7 @@ closure, the broadcast-join analogue of the docs x patterns product
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -87,24 +87,6 @@ def fuse_columns(
         .when(ml_score > 0, pick(ml_type, ml_score))
         .when(rule_score > 0, pick(rule_type, rule_score))
         .otherwise(none)
-    )
-
-
-def classify_documents(
-    df: DataFrame,
-    patterns: dict[str, DocTypePattern],
-    text_col: str = "all_text",
-) -> DataFrame:
-    """df + (doc_type, confidence). Empty/null text yields (None, 0.0)
-    inside the oracle function (document_classifier.py:86-87,146-148)."""
-    rules_udf = classify_by_rules_udf(patterns)
-    out = df.withColumn("_rule", rules_udf(F.col(text_col)))
-    fused = fuse_columns(F.col("_rule.rule_type"), F.col("_rule.rule_score"))
-    return (
-        out.withColumn("_fused", fused)
-        .withColumn("doc_type", F.col("_fused.doc_type"))
-        .withColumn("confidence", F.col("_fused.confidence"))
-        .drop("_rule", "_fused")
     )
 
 

@@ -1449,7 +1449,12 @@ def simhash_hamming_curve(
     pigeonhole blocker): cumulative near-dup pair counts at each radius,
     so the dedup rollout reads exact-dup mass (h=0) vs near-dup tail
     growth off a single result. Blocking is complete for
-    h <= blocks - seg_match, so every count is exact, not an estimate.
+    h <= blocks - seg_match, so each count is exact as long as no
+    blocking bucket exceeds 10,000 members. The pairs come from
+    simhash_neardup_pairs at its defaults max_bucket=10_000,
+    oversize='drop': on duplicate-heavy corpora an oversized
+    (combo, key) bucket yields no candidates, and the counts are then
+    lower bounds, not exact.
 
     The pair table collapses to the <=max_hamming+1-row hamming bucket
     histogram BEFORE the threshold frame touches it, so the deliberate

@@ -1,7 +1,7 @@
 """Span-level operators: ordering, normalization, document text assembly.
 
-All fully columnar (whole-stage codegen; no Python) except language
-detection, which is an Arrow-batched pandas UDF.
+All fully columnar (whole-stage codegen; no Python), language detection
+included (add_detected_language).
 
 Python-regex parity (SURVEY.md §7.3-1): the reference normalizes with Python
 `re` (`strip`, `[\\x00-\\x1F\\x7F-\\x9F]`, `\\s+`). Spark regexps are Java.
@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Exactly the codepoints where Python str.isspace() is True (BMP):
 # \t-\r, space, \x1c-\x1f, NEL \x85, NBSP \xa0, ogham  , en/em &c
@@ -260,20 +259,6 @@ def add_detected_language(
     return df.withColumn(out_col, lang).drop(*tmp)
 
 
-def detect_language_udf():
-    """Arrow-batched language detection — same pure function as the oracle,
-    so the normalization branch (CJK vs collapse) agrees by construction."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.StringType())
-    def _detect(texts):
-        from ..oracle.language import detect_language
-
-        return texts.map(detect_language)
-
-    return _detect
-
-
 def language_name_col(lang: Column) -> Column:
     """Code -> name via a literal map (tiny dim; language_detector.py:47-65);
     unknown codes pass through."""
@@ -291,7 +276,7 @@ def normalize_documents(df: DataFrame, lang_col: str | None = None) -> DataFrame
 
     If lang_col is given, that column supplies the language (already-known
     language, e.g. bench over the driver `documents` table); otherwise the
-    pandas-UDF detector runs on the 3-span sample.
+    columnar detector runs on the 3-span sample.
     """
     out = df.withColumn("_spans_sorted", sorted_spans(F.col("spans")))
 

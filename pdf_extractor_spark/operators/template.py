@@ -1,46 +1,14 @@
-"""Template field extraction (reference extractor.py:249-292, SURVEY.md §2.2).
+"""Template table matching (reference extractor.py:274-292, SURVEY.md §2.2).
 
-One Arrow-batched pandas UDF per document: runs the oracle's Python-`re`
-field extraction (parity-critical: MULTILINE search, group(1)-else-group(0),
-date/decimal conversion) for the template selected by the row's doc_type.
-Template auto-select (batch_processor.py:40-48: confidence > 0.5) is a
-columnar condition; the tiny templates dim rides in the closure.
-
-Output is map<string,string> — canonical string forms per
-oracle.extract._field_to_string (dates ISO, floats repr).
+Template field extraction itself runs inside the pipeline's fused
+classify/extract/validate UDF (operators/validate.py), which calls the
+oracle's Python-`re` extractor per document.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-AUTO_TEMPLATE_MIN_CONFIDENCE = 0.5
-
-
-def extract_fields_udf(templates: dict[str, dict]):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.MapType(T.StringType(), T.StringType()))
-    def _extract(all_text, doc_type):
-        from ..oracle.extract import _field_to_string
-        from ..oracle.template import extract_template_fields
-
-        out = []
-        for text, dt in zip(all_text, doc_type):
-            tpl = templates.get(dt) if dt is not None else None
-            if tpl is None or text is None:
-                out.append(None)
-                continue
-            fields = extract_template_fields(text, tpl)
-            out.append({k: _field_to_string(v) for k, v in fields.items()})
-        import pandas as pd
-
-        return pd.Series(out)
-
-    return _extract
-
 
 def match_table_by_headers(
     tables: DataFrame,
@@ -70,29 +38,3 @@ def match_table_by_headers(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def extract_template_fields_df(
-    df: DataFrame,
-    templates: dict[str, dict],
-    text_col: str = "all_text",
-) -> DataFrame:
-    """df + fields map for rows whose (doc_type, confidence) auto-select a
-    template; others get an empty map (reference returns {} when no template
-    applies)."""
-    fields_udf = extract_fields_udf(templates)
-    eligible = (
-        F.col("doc_type").isNotNull()
-        & (F.col("confidence") > AUTO_TEMPLATE_MIN_CONFIDENCE)
-        & F.col("doc_type").isin(*templates.keys())
-        if templates
-        else F.lit(False)
-    )
-    raw = fields_udf(
-        F.when(eligible, F.col(text_col)),  # null text for ineligible rows
-        F.col("doc_type"),
-    )
-    empty = F.map_from_arrays(
-        F.array().cast("array<string>"), F.array().cast("array<string>")
-    )
-    return df.withColumn("fields", F.coalesce(raw, empty))

@@ -186,32 +186,6 @@ def bpe_token_count(text: Column) -> Column:
     return F.when(text.isNull(), F.lit(0)).otherwise(F.size(non_ws)).cast("long")
 
 
-def stopword_ratio(text: Column, stopwords=EN_STOPWORDS) -> Column:
-    toks = tokens_col(F.lower(text))
-    hits = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def punct_ratio(text: Column) -> Column:
-    n = F.length(text)
-    punct = F.length(F.regexp_replace(text, r"[^.!?,;:]", ""))
-    return F.when(n > 0, punct / n).otherwise(F.lit(0.0))
-
-
-def digit_ratio(text: Column) -> Column:
-    n = F.length(text)
-    digits = F.length(F.regexp_replace(text, r"[^0-9]", ""))
-    return F.when(n > 0, digits / n).otherwise(F.lit(0.0))
-
-
-def mean_word_length(text: Column) -> Column:
-    toks = tokens_col(text)
-    total = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def add_quality_score(
     df, text_col: str = "text", out_col: str = "quality"
 ):

@@ -20,7 +20,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import FieldSchema, ValidationSchema
+from ..config import FieldSchema
 
 VALIDATION_TYPE = T.StructType(
     [
@@ -434,59 +434,6 @@ def field_error_col(value: Column, fs: FieldSchema) -> Column:
         err = F.lit(f"Tipo de campo desconhecido: {t}")
 
     return F.when(value.isNull(), F.lit(None).cast("string")).otherwise(err)
-
-
-def validation_columns(
-    fields_col: str, schema: ValidationSchema
-) -> tuple[Column, Column, Column]:
-    """Compile a ValidationSchema into (valid, errors, warnings) columns over
-    a map<string,string> column — the columnar record validator
-    (validator.py:235-324 minus custom validations, which callers add via
-    F.expr on the condition_sql)."""
-    err_entries: list[Column] = []
-    warn_entries: list[Column] = []
-    fields = F.col(fields_col)
-
-    for name, fs in schema.fields.items():
-        value = fields[name]
-        if fs.required:
-            missing = value.isNull() | (value == "")
-            err_entries.append(
-                F.when(missing,
-                       F.struct(F.lit(name).alias("key"),
-                                F.lit("Campo obrigatório não preenchido").alias("value")))
-            )
-        field_err = field_error_col(value, fs)
-        entry = F.when(
-            field_err.isNotNull(),
-            F.struct(F.lit(name).alias("key"), field_err.alias("value")),
-        )
-        if fs.required or fs.severity == "error":
-            err_entries.append(entry)
-        else:
-            warn_entries.append(entry)
-
-    def to_map(entries: list[Column]) -> Column:
-        if not entries:
-            return F.map_from_arrays(
-                F.array().cast("array<string>"), F.array().cast("array<string>")
-            )
-        arr = F.filter(F.array(*entries), lambda e: e.isNotNull())
-        return F.map_from_entries(arr)
-
-    errors = to_map(err_entries)
-    warnings = to_map(warn_entries)
-    if schema.strict:
-        # unknown fields -> warnings (validator.py:285-287)
-        unknown = F.map_filter(
-            F.transform_values(
-                fields, lambda k, v: F.lit("Campo não definido no esquema")
-            ),
-            lambda k, v: ~k.isin(*schema.fields.keys()),
-        )
-        warnings = F.map_concat(warnings, unknown)
-    valid = F.size(F.map_keys(errors)) == 0
-    return valid, errors, warnings
 
 
 # --------------------------------------------------------------------------

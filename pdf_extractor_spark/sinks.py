@@ -20,8 +20,6 @@ the partitioned parquet/Iceberg write in pipeline.run_pipeline).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -234,9 +232,3 @@ def export_excel(frames: dict[str, DataFrame], path: str) -> None:
                 pdf.to_excel(xw, sheet_name=sheet, index=False)
     except (ImportError, ModuleNotFoundError):
         _write_minimal_xlsx(pdfs, path)
-
-
-def append_metrics(metrics: DataFrame, path: str) -> None:
-    """Metrics/lineage append (analytics.py:154-216 record shape; Iceberg
-    `writeTo(...).append()` on a cluster, parquet append locally)."""
-    metrics.write.mode("append").parquet(path)

@@ -1,6 +1,8 @@
-"""bench.py contract invariants: every headline name resolves to a real
-queries() entry (a typo would silently drop a query from the driver's
-per-round measurement), and headline coverage spans the catalog."""
+"""bench.py and query-catalog contract invariants: every headline name
+resolves to a real queries() entry (a typo would silently drop a query from
+the per-round bench measurement), each query sits in exactly one CATALOG
+family, every query but the pipeline has an oracle, and OPERATORS.md is what
+the catalog renders."""
 
 
 def test_headline_subset_of_queries():
@@ -48,3 +50,36 @@ def test_canary_floor_is_the_committed_quiet_host_number():
     assert bench.CANARY_QUERY == "tpch_q6"
     assert 0.1 <= bench.CANARY_FLOOR_SEC <= 0.6
     assert 1.0 < bench.CANARY_DRIFT <= 1.5
+
+
+def test_catalog_families_are_disjoint():
+    import __spark_entry__ as entry
+
+    n_entries = sum(len(members) for members in entry.CATALOG.values())
+    assert n_entries == len(entry.queries())
+
+
+def test_every_query_but_the_pipeline_has_an_oracle():
+    import __spark_entry__ as entry
+
+    qs, oracles = set(entry.queries()), set(entry.oracle_sql())
+    assert oracles <= qs
+    assert qs - oracles == {"extract_pipeline"}
+
+
+def test_not_headline_names_are_queries():
+    import bench
+
+    import __spark_entry__ as entry
+
+    assert bench.NOT_HEADLINE <= set(entry.queries())
+
+
+def test_operators_md_is_fresh():
+    from tools.gen_operator_docs import OUT, render
+
+    with open(OUT) as f:
+        committed = f.read()
+    assert committed == render(), (
+        "OPERATORS.md is stale; run python tools/gen_operator_docs.py"
+    )

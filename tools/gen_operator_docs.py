@@ -1,5 +1,6 @@
-"""Generate OPERATORS.md — the auditable catalog of every queries() entry:
-name, oracle status, and the first docstring line of its wrapper.
+"""Generate OPERATORS.md — the auditable catalog of every queries() entry,
+grouped by the families of `__spark_entry__.CATALOG`: name, oracle status,
+and the first docstring paragraph of its wrapper.
 
 Usage: python tools/gen_operator_docs.py   (writes OPERATORS.md, no Spark)
 """
@@ -9,219 +10,17 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-FAMILIES: list[tuple[str, list[str]]] = [
-    ("Reference analytics (dashboard §2.7)", [
-        "success_rate", "kpis", "count_by_type", "distinct_types",
-        "avg_purchase_value", "count_by_date", "densified_daily_counts",
-        "filtered_range", "top_error_props", "recent_events",
-        "grouped_mean_value", "user_top_event", "avg_time_tiers",
-    ]),
-    ("Relational core (TPC-H adapted + joins)", [
-        *[f"tpch_q{i}" for i in range(1, 23)],
-        "top_revenue_orders", "customers_per_region",
-    ]),
-    ("Extraction / classification / validation (reference parity)", [
-        "extract_pipeline", "extract_pipeline_digest",
-        "classify_rules", "preprocess_text",
-        "lang_name", "span_validations", "auto_repair", "table_match",
-        "page_filter", "span_regression", "nfc_normalize",
-    ]),
-    ("Text statistics & quality", [
-        "token_count", "bpe_token_count", "quality_score", "lang_id",
-        "fingerprint", "repetition_stats", "tfidf_top_terms",
-        "token_entropy", "bpe_pair_counts", "bpe_merges", "bpe_encode", "bpe_vocab",
-        "wordpiece_encode", "lattice_vocab", "lattice_encode",
-        "pmi_cooccurrence",
-        "lm_perplexity", "ngram_lm", "kn_bigram_lm", "kn_perplexity", "stupid_backoff_score", "quality_tiers",
-        "gopher_filter", "c4_filter", "hash_lr", "train_hash_lr",
-        "hash_lr_trained", "model_accuracy", "roc_auc", "curriculum_order", "packing_efficiency",
-        "calibration_bins",
-        "entity_mentions", "vocab_coverage",
-        "readability", "tokenizer_fertility", "ocr_garble_score",
-        "script_mix", "sentence_segment", "quality_percentile",
-        "vocab_prune", "lang_confusion",
-        "zipf_fit", "heaps_law", "word_burstiness", "gt_unseen_mass", "yule_k",
-        "stylometry_delta", "source_diversity", "text_tiling",
-    ]),
-    ("Document structure (layout cleanup & mining)", [
-        "dehyphenate", "header_footer_strip", "section_split",
-        "quote_extract", "toc_extract", "footnote_link", "list_detect",
-        "table_column_types", "acronym_extract", "unit_normalize",
-    ]),
-    ("Keywords & search", [
-        "keyword_rake", "reverse_search", "assoc_rules",
-        "autocomplete_prefix",
-    ]),
-    ("Deduplication", [
-        "exact_dedup", "line_dedup", "substring_dedup", "ngram_jaccard",
-        "winnow_fingerprints", "winnow_pairs", "minhash_lsh",
-        "simhash_neardup", "neardup_clusters", "dedup_survivors",
-        "dedup_apply", "dup_ngram_stats", "incremental_dedup", "incremental_lsh_dedup", "embedding_neardup",
-        "semdedup", "fuzzy_name_match", "containment_pairs",
-        "intra_doc_dedup", "ngram_novelty", "cluster_size_hist",
-        "dedup_threshold_curve", "lsh_candidate_eval", "lsh_bands_sweep",
-        "simhash_hamming_curve",
-    ]),
-    ("Decontamination & corpus curation", [
-        "decontaminate", "decontaminate_near", "pii_scrub", "k_anonymity", "mix_weights", "epoch_plan",
-        "global_shuffle", "hash_sample", "host_quota_sample",
-        "curation_funnel", "chunk_documents", "pack_sequences",
-        "bloom_decontaminate",
-        "stratified_sample", "corpus_rollup", "dsir_weights",
-        "source_similarity", "source_similarity_kmv",
-        "lang_alpha_weights", "corpus_digest",
-        "host_boilerplate", "dataset_split", "pareto_frontier",
-        "sample_alloc", "badword_filter", "luhn_scan",
-    ]),
-    ("Similarity search (ANN)", [
-        "cosine_topk", "bm25_topk", "query_likelihood", "phrase_search", "lsh_ann_topk", "ivf_ann_topk", "pq_encode", "pq_adc_topk", "pq_rerank_topk", "ivfpq_ann_topk", "mutual_knn", "ann_recall_eval",
-        "kmeans_clusters", "cluster_balanced_sample",
-        "embedding_quantize", "hard_negatives", "bitext_mine",
-        "embedding_outliers", "centroid_drift",
-    ]),
-    ("Web: HTML, URLs, link graph", [
-        "html_main_content", "html_blocks", "html_links",
-        "anchor_text_index", "url_normalize", "url_dedup", "host_stats",
-        "url_blocklist", "robots_rules", "crawl_schedule",
-        "pagerank_hosts", "crawl_frontier", "triangle_hosts",
-        "link_reciprocity", "label_propagation", "cc_hosts", "cc_incremental",
-    ]),
-    ("Layout (reading order)", ["layout_order", "layout_text", "text_tables"]),
-    ("Multimodal (interleaved media)", [
-        "media_meta", "media_features", "media_resize", "frame_sample",
-        "audio_segments",
-        "media_captions", "multimodal_pack", "media_dedup", "media_mime_sniff", "media_phash",
-        "media_phash_neardup", "span_interleave_stats", "span_kind_transitions",
-        "media_ref_integrity",
-    ]),
-    ("Events: sessions, as-of, rollups, sketches", [
-        "sessionize", "asof_last_purchase", "resample_locf", "events_rollup",
-        "events_pivot", "range_join_windows", "cms_user_counts",
-        "click_not_purchase_users",
-        "moving_avg_daily", "daily_anomaly", "value_quantiles", "approx_value_quantiles",
-        "approx_distinct_users", "hll_mergeable_users", "sample_quantile_sketch", "heavy_hitters", "event_dedup", "props_variant_stats", "funnel_conversion", "retention_cohorts",
-        "key_skew_stats", "salted_join", "scd2_user_status",
-        "ab_test", "dow_seasonality", "event_transitions",
-        "attribution_credit", "decayed_activity", "time_to_convert",
-        "cusum_changepoint", "event_paths", "rfm_segments", "bot_detect",
-        "anomaly_mad", "value_histogram", "event_rle", "dow_hour_heatmap",
-    ]),
-    ("Table layout & maintenance (Iceberg upkeep)", [
-        "zorder_key", "hilbert_key", "compaction_plan", "snapshot_diff", "rendezvous_shards",
-        "zone_map_prune", "column_conformance", "expire_snapshots",
-        "encoding_advisor",
-    ]),
-    ("Fuzzy matching & record linkage", [
-        "levenshtein_names", "phonetic_groups", "linkage_scores",
-        "fuzzy_name_match",
-    ]),
-    ("Dedup extensions (CDC / overlap / audit)", [
-        "cdc_chunk_dedup", "rouge_overlap", "dedup_audit_pairs",
-        "dup_rate_by_source",
-    ]),
-    ("Engagement & robust statistics", [
-        "dau_wau_stickiness", "gini_value", "user_entropy", "ewma_daily",
-        "seasonal_decompose", "churn_detect", "robust_value_stats",
-        "wow_growth", "interarrival_hist", "bootstrap_ci", "ks_test",
-        "psi_drift", "benford_deviation", "dp_counts", "markov_stationary",
-        "kaplan_meier", "events_cube", "autocorrelation", "event_trigrams",
-        "source_trend", "dispersion_index", "capture_recapture",
-        "markov_entropy_rate",
-    ]),
-    ("Link-graph extensions", [
-        "hits_hosts", "degree_ccdf", "kcore_hosts", "host_outlink_jaccard",
-        "ppr_hosts", "rrf_fusion",
-        "rank_biased_overlap",
-        "adamic_adar", "degree_assortativity", "graph_modularity",
-        "clustering_coefficient", "community_conductance",
-    ]),
-    ("Embedding & retrieval eval extensions", [
-        "embedding_quantile_norm", "pca_top_component", "cluster_purity",
-        "ndcg_topk", "kmv_setops", "embedding_isotropy", "abtt_transform",
-        "hashed_doc_embedding", "doc_similar_topk",
-    ]),
-    ("Corpus inspection & tokenizer extensions", [
-        "concordance", "branching_entropy", "collocations_llr",
-        "morph_split", "token_length_hist", "utf8_stats", "pps_sample", "weighted_sample",
-        "lang_source_mi", "filter_kappa", "filter_committee", "filter_pr",
-    ]),
-    ("Relational & quality-audit extensions", [
-        "order_deciles", "part_affinity", "shipping_delay_stats",
-        "discount_revenue_curve", "regional_top_parts", "null_profile",
-        "numeric_profile", "join_size_estimate", "user_tier_enrich",
-        "corr_matrix",
-    ]),
-    ("Multimodal extensions", [
-        "shot_boundaries", "image_tiles",
-    ]),
-]
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+OUT = os.path.join(ROOT, "OPERATORS.md")
 
 
-# one-liners for wrappers whose behavior is self-evident enough that the
-# wrapper carries no docstring; the operator modules hold the full story
-FALLBACK = {
-    "success_rate": "Batch success rate over the analytics log (dashboard batch report).",
-    "kpis": "The dashboard's 4-cell KPI row: total / success / today / avg processing time.",
-    "count_by_type": "Event count per type (dashboard bar chart).",
-    "distinct_types": "Distinct event types, sorted.",
-    "avg_purchase_value": "Average value of purchase events.",
-    "count_by_date": "Events per calendar day.",
-    "densified_daily_counts": "Daily counts densified over the full date range (zero-filled gaps).",
-    "filtered_range": "Events in a timestamp range with a type filter (pushdown-checked).",
-    "top_error_props": "Most common error properties (top-k with deterministic ties).",
-    "recent_events": "Most recent N events (TakeOrderedAndProject).",
-    "grouped_mean_value": "Mean event value per type (batch report row).",
-    "user_top_event": "Each user's most frequent event type (per-user window argmax).",
-    "tpch_q1": "TPC-H Q1 pricing summary: the canonical wide partial-agg scan.",
-    "tpch_q3": "TPC-H Q3 shipping priority: 3-way join + top-k revenue.",
-    "tpch_q5": "TPC-H Q5 local supplier volume: 6-way join, broadcast dims.",
-    "tpch_q6": "TPC-H Q6 forecast revenue: pure scan-filter-agg (pushdown showcase).",
-    "top_revenue_orders": "Top orders by lineitem revenue (join + agg + top-k).",
-    "customers_per_region": "Customer counts rolled up region<-nation (broadcast dims).",
-    "preprocess_text": "Reference text preprocessing (Python whitespace-class parity, lowercase).",
-    "lang_name": "Language code -> display name lookup (reference language map).",
-    "token_count": "Whitespace token count per document, fully columnar.",
-    "bpe_token_count": "BPE-ish subword count via the reference regex, columnar.",
-    "quality_score": "Length/stopword/punct/digit quality score per document.",
-    "lang_id": "N-gram heuristic language identification, columnar (no UDF).",
-    "fingerprint": "Rolling-hash document fingerprint (integer arithmetic, columnar).",
-    "repetition_stats": "Gopher-style repetition stats: dup-unigram fraction, top-bigram share.",
-    "tfidf_top_terms": "Per-doc top TF-IDF terms (corpus df join + per-doc window top-k).",
-    "exact_dedup": "Exact duplicate groups by text digest (digest-first shuffle).",
-    "ngram_jaccard": "Exact n-gram Jaccard similarity pairs via shingle inverted index.",
-    "minhash_lsh": "MinHash-LSH candidate pairs verified with exact Jaccard.",
-    "simhash_neardup": "SimHash near-dup pairs via multi-segment pigeonhole blocking.",
-    "token_entropy": "Per-doc Shannon entropy of the unigram distribution.",
-    "bpe_pair_counts": "BPE merge statistic: word-frequency-weighted adjacent character-pair counts over the distinct-word table.",
-    "bpe_merges": "BPE tokenizer TRAINING (first 3 merge rules): argmax pair -> greedy left-to-right merge -> recount, all over the vocabulary-sized symbol table; oracle replays the loop with recursive CTEs.",
-    "pmi_cooccurrence": "Windowed token co-occurrence counts with PMI vs the unigram distribution.",
-    "url_normalize": "URL canonicalization: scheme/host case, ports, utm_*, fragments.",
-    "url_dedup": "Recrawl collapse: one canonical fetch per normalized URL (min id + count).",
-    "host_stats": "Per-host rollups over normalized URLs (partial-agg heavy hitters).",
-    "cosine_topk": "Exact brute-force cosine top-k (the ANN recall baseline).",
-    "lsh_ann_topk": "Random-hyperplane LSH bucketed ANN top-k.",
-    "ivf_ann_topk": "IVF coarse-quantizer ANN top-k with precomputed centroids.",
-    "embedding_neardup": "Embedding near-duplicate pairs blocked by LSH bucket.",
-    "media_meta": "Typed metadata projection over the interleaved media table.",
-    "media_features": "mapInPandas decode+featurize plumbing (stubbed kernel, real batches).",
-    "frame_sample": "Every-nth frame sampling via explode of a frame sequence.",
-    "extract_pipeline": "The flagship end-to-end extract->classify->validate pipeline (rows-only; span-parity pytest).",
-}
-
-
-def main() -> None:
+def render() -> str:
+    """The OPERATORS.md text for the catalog as it is now."""
     import __spark_entry__ as entry
 
     qmap = entry.queries()
     oracles = entry.oracle_sql()
-    listed = [n for _, names in FAMILIES for n in names]
-    missing = sorted(set(qmap) - set(listed))
-    extra = sorted(set(listed) - set(qmap))
-    if extra:
-        raise SystemExit(f"catalog lists unknown queries: {extra}")
-
     lines = [
         "# OPERATORS — the full queries() catalog",
         "",
@@ -232,32 +31,25 @@ def main() -> None:
         "with pytest parity coverage.",
         "",
     ]
-    for family, names in FAMILIES:
+    for family, members in entry.CATALOG.items():
         lines.append(f"## {family}")
         lines.append("")
         lines.append("| query | oracle | what it computes |")
         lines.append("|---|---|---|")
-        for n in names:
-            fn = qmap[n]
+        for n, fn in members.items():
             doc = (fn.__doc__ or "").strip().split("\n\n")[0]
             doc = " ".join(x.strip() for x in doc.split("\n"))
-            if not doc:
-                doc = FALLBACK.get(n, "")
             orc = "SQL" if n in oracles else "rows-only (pytest parity)"
             lines.append(f"| `{n}` | {orc} | {doc} |")
         lines.append("")
-    if missing:
-        lines.append("## Uncataloged")
-        lines.append("")
-        for n in missing:
-            lines.append(f"- `{n}`")
-        lines.append("")
+    return "\n".join(lines)
 
-    out = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "OPERATORS.md")
-    with open(out, "w") as f:
-        f.write("\n".join(lines))
-    print(f"wrote {out}: {len(qmap)} queries, {len(missing)} uncataloged")
+
+def main() -> None:
+    text = render()
+    with open(OUT, "w") as f:
+        f.write(text)
+    print(f"wrote {OUT}")
 
 
 if __name__ == "__main__":

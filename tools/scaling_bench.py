@@ -30,12 +30,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# N and 4N: 4 vs 16 of the host's 32 hardware threads by default, so the 4N
-# level still has headroom over the shared host's background load. Override
-# with SCALING_LEVELS="2,8" when the host carries heavy external load (any
-# N,4N pair evidences the north-rule criterion).
+# N and 4N with N = cpu_count // 8 (at least 1): 4,16 on a 32-thread host,
+# 1,4 on a 4-core one, so the 4N level can always be pinned and still leaves
+# headroom over the host's background load on large hosts. Override with
+# SCALING_LEVELS="2,8" when the host carries heavy external load (any N,4N
+# pair evidences the north-rule criterion).
+_BASE = max(1, (os.cpu_count() or 4) // 8)
 LEVELS = tuple(
-    int(x) for x in os.environ.get("SCALING_LEVELS", "4,16").split(",")
+    int(x)
+    for x in os.environ.get("SCALING_LEVELS", f"{_BASE},{4 * _BASE}").split(",")
 )
 
 
