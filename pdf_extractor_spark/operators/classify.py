@@ -30,29 +30,21 @@ _RULE_RESULT = T.StructType(
 def classify_by_rules_udf(patterns: dict[str, DocTypePattern]):
     from pyspark.sql.functions import pandas_udf
 
-    # plain tuples in the closure — cheap to pickle, rebuilt per worker
-    pattern_items = tuple(
-        (dt, p.keywords, p.patterns) for dt, p in patterns.items()
-    )
+    all_kws = tuple(sorted({kw for p in patterns.values() for kw in p.keywords}))
 
     @pandas_udf(_RULE_RESULT)
     def _classify(texts):
         import pandas as pd
 
-        from ..config import DocTypePattern as DTP
         from ..oracle.classifier import (
             classify_by_rules,
             keyword_presence_batch,
         )
 
-        pats = {dt: DTP(dt, kw, rx) for dt, kw, rx in pattern_items}
-        all_kws = tuple(
-            sorted({kw for p in pats.values() for kw in p.keywords})
-        )
         presence = keyword_presence_batch(texts, all_kws)
         types, scores = [], []
         for text, present in zip(texts, presence):
-            t, s = classify_by_rules(text, pats, present=present)
+            t, s = classify_by_rules(text, patterns, present=present)
             types.append(t)
             scores.append(s)
         return pd.DataFrame({"rule_type": types, "rule_score": scores})

@@ -4,7 +4,11 @@ Six families, each with a distinct scale profile:
 
   * exact_dedup        — md5(text) groupBy; one shuffle on the digest.
   * ngram_jaccard_pairs— shingle inverted index self-join; DF-capped shingles
-                         bound the join fan-out (hot-shingle guard).
+                         bound the join fan-out. Hot-key caps here go
+                         through session.cap_heavy_keys, except the two
+                         that keep their own census: minhash_lsh_pairs
+                         ('star' needs the bucket root) and
+                         simhash_neardup_pairs (tiered in-row census).
   * minhash_lsh_pairs  — MinHash signatures (permutation family
                          h_i(x) = (a_i*x + b_i) mod p over xxhash64 shingle
                          ids) banded into LSH buckets; candidates verified
@@ -31,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import fan_out
+from ..session import cap_heavy_keys, fan_out
 from .textstats import tokens_col
 
 MINHASH_P = (1 << 31) - 1  # Mersenne prime 2^31-1
@@ -95,11 +99,11 @@ def shingle_index(
     max_df: int | None = 1000,
 ) -> DataFrame:
     """(id, shingle) inverted index with optional hot-shingle cap: shingles
-    appearing in more than max_df docs are dropped from BOTH sides (standard
-    guard — a stop-shingle would otherwise explode the self-join). Shingles
-    are 64-bit numeric ids (_shingle_id_sets): identity-only downstream use
-    means the index is equivalent to the string form, and the shuffle moves
-    8-byte keys instead of n-word strings."""
+    appearing in more than max_df docs are dropped from BOTH sides by
+    cap_heavy_keys (a stop-shingle would otherwise explode the self-join).
+    Shingles are 64-bit numeric ids (_shingle_id_sets): identity-only
+    downstream use means the index is equivalent to the string form, and
+    the shuffle moves 8-byte keys instead of n-word strings."""
     # explode_OUTER + isNotNull, NOT plain explode: InferFiltersFromGenerate
     # would add size(sids)>0 and predicate pushdown substitutes the whole
     # tokenize+shingle pipeline below the projection, re-evaluating it per
@@ -111,15 +115,7 @@ def shingle_index(
         .select("id", F.explode_outer("sids").alias("shingle"))
         .where(F.col("shingle").isNotNull())
     )
-    if max_df is not None:
-        hot = (
-            idx.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("shingle")
-        )
-        idx = idx.join(F.broadcast(hot), "shingle", "left_anti")
-    return idx
+    return cap_heavy_keys(idx, "shingle", max_df)[0]
 
 
 def ngram_jaccard_pairs(
@@ -498,17 +494,14 @@ def minhash_bucket_stats(
     max_bucket: int = 10_000,
 ) -> DataFrame:
     """Observability for the max_bucket guard: one row per oversized
-    (band, bucket) with its member count — run (or sink) this alongside
-    minhash_lsh_pairs to log exactly what the cap dropped."""
+    (band, bucket) with its member count `sz` (cap_heavy_keys' `heavy`
+    report) — run (or sink) this alongside minhash_lsh_pairs to log
+    exactly what the cap dropped."""
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, text_col, id_col, n, num_hashes, seed)
     banded = _banded_buckets(sigs, bands, rows_per_band)
-    return (
-        banded.groupBy("band", "bucket")
-        .agg(F.count("*").alias("sz"))
-        .filter(F.col("sz") > max_bucket)
-    )
+    return cap_heavy_keys(banded, ["band", "bucket"], max_bucket)[1]
 
 
 # -- SimHash -----------------------------------------------------------------
@@ -611,14 +604,7 @@ def winnow_pairs(
     idx = winnow_fingerprints(df, text_col, id_col, k, w).withColumnRenamed(
         id_col, "id"
     )
-    if max_df is not None:
-        hot = (
-            idx.groupBy("fingerprint")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("fingerprint")
-        )
-        idx = idx.join(F.broadcast(hot), "fingerprint", "left_anti")
+    idx = cap_heavy_keys(idx, "fingerprint", max_df)[0]
     a = idx.hint("merge").alias("a")
     b = idx.hint("merge").alias("b")
     return (
@@ -1070,14 +1056,8 @@ def incremental_minhash_pairs(
         bi = _banded_buckets(si, bands, rpb).select(
             "band", "bucket", F.col("id").alias("index_id")
         )
-    if max_bucket is not None:
-        hot = (
-            bi.groupBy("band", "bucket")
-            .agg(F.count("*").alias("sz"))
-            .filter(F.col("sz") > max_bucket)
-            .select("band", "bucket")
-        )
-        bi = bi.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
+    bi, hot = cap_heavy_keys(bi, ["band", "bucket"], max_bucket)
+    if hot is not None:
         bb = bb.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
     cands = (
         bb.join(bi, ["band", "bucket"])

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import cap_heavy_keys
+
 
 def name_dictionary(
     df: DataFrame, name_col: str, id_col: str
@@ -61,18 +63,15 @@ def levenshtein_name_pairs(
     -> self-equi-join on the block key over the DICTIONARY (vocabulary-
     sized) -> JVM levenshtein filter. The block-key join bounds the
     quadratic term to the largest block; `max_block` drops blocks past
-    that cap (same guard contract as minhash_lsh_pairs.max_bucket) so one
-    degenerate head noun cannot go quadratic in the dictionary size."""
-    dict_df = name_dictionary(df, name_col, id_col).withColumn(
-        "blk", F.element_at(F.split(F.col("name"), r"\s+"), -1)
+    that cap before the join (session.cap_heavy_keys) so one degenerate
+    head noun cannot go quadratic in the dictionary size."""
+    dict_df, _ = cap_heavy_keys(
+        name_dictionary(df, name_col, id_col).withColumn(
+            "blk", F.element_at(F.split(F.col("name"), r"\s+"), -1)
+        ),
+        "blk",
+        max_block,
     )
-    if max_block is not None:
-        sizes = dict_df.groupBy("blk").agg(F.count("*").alias("_sz"))
-        dict_df = (
-            dict_df.join(F.broadcast(sizes), "blk")
-            .where(F.col("_sz") <= max_block)
-            .drop("_sz")
-        )
     a = dict_df.select(
         F.col("blk"),
         F.col("name").alias("name_a"),

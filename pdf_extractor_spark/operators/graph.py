@@ -32,6 +32,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import cap_heavy_keys
+
+
+def undirected_edges(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """(src, dst) — the undirected closure of a directed edge list: both
+    orientations of every edge, self-loops dropped, duplicates removed.
+    Columns keep the caller's `src`/`dst` names."""
+    return (
+        edges.select(src, dst)
+        .union(edges.select(F.col(dst).alias(src), F.col(src).alias(dst)))
+        .where(F.col(src) != F.col(dst))
+        .distinct()
+    )
+
 
 def khop_reachable(
     edges: DataFrame,
@@ -286,12 +302,7 @@ def label_propagation(edges: DataFrame, iters: int = 2) -> DataFrame:
     between rounds to cut lineage, noted here because local[n] never
     shows that failure mode.
     """
-    und = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    und = undirected_edges(edges)
     labels = (
         und.select(F.col("src").alias("node"))
         .distinct()
@@ -533,19 +544,14 @@ def host_outlink_jaccard(
     joined back. `max_df` drops destinations linked by more than that
     many hosts (a universally-linked CDN URL would quadratically explode
     the candidate set and carries no similarity signal — the stopword
-    argument, same guard contract as shingle_index)."""
+    argument); the cap runs before the self-join, via
+    session.cap_heavy_keys."""
     inv = (
         edges.select(F.col(src).alias("h"), F.col(dst).alias("d"))
         .where(F.col("h") != F.col("d"))
         .distinct()
     )
-    if max_df is not None:
-        hot = inv.groupBy("d").agg(F.count("*").alias("_df"))
-        inv = (
-            inv.join(hot, "d")
-            .where(F.col("_df") <= max_df)
-            .select("h", "d")
-        )
+    inv, _ = cap_heavy_keys(inv, "d", max_df)
     sizes = inv.groupBy("h").agg(F.count("*").cast("long").alias("sz"))
     pairs = (
         inv.select(F.col("h").alias("host_a"), "d")
@@ -805,9 +811,7 @@ def connected_components(
     session width — correct for a web-scale host graph where the label
     table is node-sized; callers with a bounded node domain (host
     graphs after host-level rollup often are) should size it down."""
-    und = edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).where(F.col("src") != F.col("dst")).distinct()
+    und = undirected_edges(edges)
     if n_partitions is not None:
         und = und.repartition(n_partitions)
     und = und.localCheckpoint(eager=True)
@@ -1087,25 +1091,22 @@ def adamic_adar_topk(
     so dropping those pivots bounds the quadratic while perturbing
     scores by a known epsilon; None keeps the sum exact (right at the
     bounded test graph, and the default so the DuckDB oracle can mirror
-    the exact sum). The anti-join against existing edges and the final
-    cut are TakeOrderedAndProject — no global sort of the pair space."""
-    und = (
-        edges.select(src, dst)
-        .union(
-            edges.select(F.col(dst).alias(src), F.col(src).alias(dst))
-        )
-        .where(F.col(src) != F.col(dst))
-        .distinct()
-    )
+    the exact sum). The cap removes over-cap pivots from the wedge arms
+    BEFORE the wedge join (session.cap_heavy_keys on the pivot column),
+    so an over-cap hub emits no wedge at all; degrees and the
+    existing-edge anti-join still read the full closure, so every
+    surviving score is unchanged. The anti-join against existing edges
+    and the final cut are TakeOrderedAndProject — no global sort of the
+    pair space."""
+    und = undirected_edges(edges, src, dst)
     deg = (
         und.groupBy(src)
         .agg(F.count("*").alias("deg"))
         .select(F.col(src).alias("w"), "deg")
     )
-    if max_pivot_degree is not None:
-        deg = deg.where(F.col("deg") <= max_pivot_degree)
-    n1 = und.select(F.col(src).alias("w"), F.col(dst).alias("u"))
-    n2 = und.select(F.col(src).alias("w"), F.col(dst).alias("v"))
+    arms, _ = cap_heavy_keys(und, src, max_pivot_degree)
+    n1 = arms.select(F.col(src).alias("w"), F.col(dst).alias("u"))
+    n2 = arms.select(F.col(src).alias("w"), F.col(dst).alias("v"))
     wedges = n1.join(n2, "w").where(F.col("u") < F.col("v"))
     open_w = wedges.join(
         und.select(F.col(src).alias("u"), F.col(dst).alias("v")),
@@ -1146,14 +1147,7 @@ def degree_assortativity(
     accumulator can exceed 2^63: promote the moments to double there;
     the formula is unchanged.) Zero degree variance (regular graph)
     yields NULL, never a divide-by-zero error under ANSI mode."""
-    und = (
-        edges.select(src, dst)
-        .union(
-            edges.select(F.col(dst).alias(src), F.col(src).alias(dst))
-        )
-        .where(F.col(src) != F.col(dst))
-        .distinct()
-    )
+    und = undirected_edges(edges, src, dst)
     deg = (
         und.groupBy(src)
         .agg(F.count("*").alias("d"))
@@ -1210,15 +1204,7 @@ def modularity(edges: DataFrame, iters: int = 2) -> DataFrame:
     node/edge-bounded tables, so they take the repo's standard eager
     localCheckpoint, the same treatment as markov_stationary's
     transition table."""
-    und = (
-        edges.select("src", "dst")
-        .union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = undirected_edges(edges).localCheckpoint(eager=True)
     labels = (
         label_propagation(edges, iters=iters)
         .select(F.col("host").alias("node"), F.col("community").alias("label"))
@@ -1335,15 +1321,7 @@ def community_conductance(edges: DataFrame, iters: int = 2) -> DataFrame:
     φ is one 6-dp-rounded division — engine-bit-identical. A community
     spanning the whole graph has min(vol, M−vol) = 0 and yields NULL,
     never an ANSI divide-by-zero."""
-    und = (
-        edges.select("src", "dst")
-        .union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = undirected_edges(edges).localCheckpoint(eager=True)
     labels = (
         label_propagation(edges, iters=iters)
         .select(F.col("host").alias("node"), F.col("community").alias("label"))

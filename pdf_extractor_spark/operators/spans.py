@@ -270,21 +270,14 @@ def language_name_col(lang: Column) -> Column:
     return F.coalesce(F.create_map(*pairs)[lang], lang)
 
 
-def normalize_documents(df: DataFrame, lang_col: str | None = None) -> DataFrame:
+def normalize_documents(df: DataFrame) -> DataFrame:
     """documents(doc_id, spans) -> + lang, spans (ordered & normalized with
-    `order` field), all_text, meta.
-
-    If lang_col is given, that column supplies the language (already-known
-    language, e.g. bench over the driver `documents` table); otherwise the
-    columnar detector runs on the 3-span sample.
+    `order` field), all_text, meta. The language comes from the columnar
+    detector run on the 3-span sample.
     """
     out = df.withColumn("_spans_sorted", sorted_spans(F.col("spans")))
-
-    if lang_col:
-        out = out.withColumn("lang", F.col(lang_col))
-    else:
-        out = out.withColumn("_sample", text_sample(F.col("_spans_sorted")))
-        out = add_detected_language(out, "_sample", "lang")
+    out = out.withColumn("_sample", text_sample(F.col("_spans_sorted")))
+    out = add_detected_language(out, "_sample", "lang")
 
     norm_struct = lambda s, i: F.struct(  # noqa: E731
         s["kind"].alias("kind"),

@@ -20,7 +20,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import FieldSchema
+from ..config import DocTypePattern, FieldSchema, ValidationSchema
+from ..oracle.extract import AUTO_TEMPLATE_MIN_CONFIDENCE
 
 VALIDATION_TYPE = T.StructType(
     [
@@ -29,8 +30,6 @@ VALIDATION_TYPE = T.StructType(
         T.StructField("warnings", T.MapType(T.StringType(), T.StringType()), True),
     ]
 )
-
-AUTO_TEMPLATE_MIN_CONFIDENCE = 0.5  # batch_processor.py:42
 
 _FUSED_TYPE = T.StructType(
     [
@@ -43,31 +42,10 @@ _FUSED_TYPE = T.StructType(
 )
 
 
-def _rebuild_schemas(schemas_conf: dict[str, dict]):
-    from ..config import FieldSchema as FS
-    from ..config import ValidationSchema as VS
-
-    schemas = {}
-    for name, data in schemas_conf.items():
-        schemas[name] = VS(
-            name=name,
-            fields={
-                fn: FS(
-                    type=f.get("type", "string"),
-                    required=bool(f.get("required", False)),
-                    severity=f.get("severity", "error"),
-                    options=f.get("options", {}) or {},
-                )
-                for fn, f in data.get("fields", {}).items()
-            },
-            strict=bool(data.get("strict", False)),
-            custom_validations=tuple(data.get("custom_validations", ())),
-        )
-    return schemas
-
-
 def classify_extract_validate_udf(
-    pattern_items: tuple, templates: dict[str, dict], schemas_conf: dict[str, dict]
+    patterns: dict[str, DocTypePattern],
+    templates: dict[str, dict],
+    schemas: dict[str, ValidationSchema],
 ):
     """all_text -> struct(doc_type, confidence, fields, validation): rule
     classification + fusion cascade + template field extraction + schema
@@ -80,14 +58,19 @@ def classify_extract_validate_udf(
     at local[16] on a 32-core host). All parity-critical Python-`re` work
     (document_classifier.py:84-115 scoring, extractor.py:252-272 template
     regexes, validator.py:41-324) happens in this single stage via the
-    oracle functions, so Spark output == oracle output by construction."""
+    oracle functions, so Spark output == oracle output by construction.
+
+    The config arrives as the loaded frozen dataclasses (config.load_*),
+    which pickle as they are; the sorted keyword tuple is derived here,
+    once per UDF, not once per batch."""
     from pyspark.sql.functions import pandas_udf
+
+    all_kws = tuple(sorted({kw for p in patterns.values() for kw in p.keywords}))
 
     @pandas_udf(_FUSED_TYPE)
     def _run(all_text):
         import pandas as pd
 
-        from ..config import DocTypePattern as DTP
         from ..oracle.classifier import (
             classify_by_rules,
             fuse_classification,
@@ -97,15 +80,9 @@ def classify_extract_validate_udf(
         from ..oracle.template import extract_template_fields
         from ..oracle.validator import validate_data
 
-        pats = {dt: DTP(dt, kw, rx) for dt, kw, rx in pattern_items}
-        schemas = _rebuild_schemas(schemas_conf)
-
         # keyword presence for the whole Arrow batch in one C++ pass per
         # keyword (exactness argument in keyword_presence_batch) — the
         # per-doc Python union scan was the kernel's dominant cost
-        all_kws = tuple(
-            sorted({kw for p in pats.values() for kw in p.keywords})
-        )
         presence = keyword_presence_batch(all_text, all_kws)
 
         out = []
@@ -116,7 +93,7 @@ def classify_extract_validate_udf(
             # poisoned document must never kill the 10^12-doc job
             try:
                 rule_type, rule_score = classify_by_rules(
-                    text, pats, present=present
+                    text, patterns, present=present
                 )
                 doc_type, confidence = fuse_classification(
                     rule_type, rule_score, None, 0.0
@@ -185,7 +162,7 @@ def classify_extract_validate_udf(
         )
 
         for sname, entries in pending.items():
-            schema = next(s for s in schemas.values() if s.name == sname)
+            schema = schemas[sname]
             fields_list = [f for _i, f, _v in entries]
             for cv in schema.custom_validations:
                 try:

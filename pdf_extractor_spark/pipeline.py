@@ -40,41 +40,24 @@ OUTPUT_COLUMNS = [
 ]
 
 
-def _raw_schemas_conf(schema_dir: str | None = None) -> dict[str, dict]:
-    """Raw JSON dicts (picklable for the UDF closure). Delegates to the
-    zip-safe loader so the --py-files artifact works (config._load_json_dir
-    falls back to importlib.resources inside a zip)."""
-    from .config import _load_json_dir
-
-    conf_dir = schema_dir or os.path.join(
-        os.path.dirname(__file__), "conf", "schemas"
-    )
-    return {data["name"]: data for data in _load_json_dir(conf_dir)}
-
-
 def extract_documents(
-    df: DataFrame,
-    patterns=None,
-    templates=None,
-    schemas_conf=None,
-    lang_col: str | None = None,
+    df: DataFrame, patterns=None, templates=None, schemas=None
 ) -> DataFrame:
     """documents(doc_id, spans) -> extracted (SURVEY.md §1.4 output schema).
-    Pure transformation — no partitioning/sink concerns (see run_pipeline)."""
+    Pure transformation — no partitioning/sink concerns (see run_pipeline).
+    The config arguments default to the packaged config (config.load_*);
+    its frozen dataclasses travel in the UDF closure as they are."""
     patterns = patterns or load_patterns()
     templates = templates or load_templates()
-    schemas_conf = schemas_conf if schemas_conf is not None else _raw_schemas_conf()
+    schemas = schemas if schemas is not None else load_schemas()
 
-    out = normalize_documents(df, lang_col=lang_col)
+    out = normalize_documents(df)
 
     # classification + template extraction + validation fused into ONE
     # pandas UDF: one Python worker per task, one Arrow crossing of
     # all_text (see classify_extract_validate_udf docstring; language
     # detection and span normalization stay fully columnar upstream)
-    pattern_items = tuple(
-        (dt, p.keywords, p.patterns) for dt, p in patterns.items()
-    )
-    cev = classify_extract_validate_udf(pattern_items, templates, schemas_conf)
+    cev = classify_extract_validate_udf(patterns, templates, schemas)
     out = out.withColumn("_r", cev(F.col("all_text")))
     out = (
         out.withColumn("doc_type", F.col("_r.doc_type"))
@@ -191,7 +174,6 @@ def run_pipeline(
     waves: int = 1,
     resume: bool = True,
     fail_after_wave: int | None = None,
-    lang_col: str | None = None,
     transform=None,
     metrics_fn=None,
 ) -> dict:
@@ -225,11 +207,7 @@ def run_pipeline(
             bucketed.filter(F.col("bucket").isin(wave_buckets)),
             wave_buckets, salts, shuffle_n,
         )
-        stage = (
-            transform
-            if transform is not None
-            else (lambda d: extract_documents(d, lang_col=lang_col))
-        )
+        stage = transform if transform is not None else extract_documents
         extracted = stage(subset).withColumn(
             "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)).cast("int")
         )

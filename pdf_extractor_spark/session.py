@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 # Records per Arrow batch for pandas-UDF stages. Documents can carry up to
 # ~10^4 spans (skew tail); 2048 rows/batch keeps a batch under ~100MB even
@@ -131,6 +132,25 @@ def fan_out(df, min_parts: int | None = None):
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def cap_heavy_keys(df, keys, cap: int | None):
+    """(kept, heavy) — the one hot-key guard, applied BEFORE a fan-out
+    (self-join, wedge join, block join) so a key group with more than
+    `cap` rows never reaches it. `heavy` holds one (keys..., sz) row per
+    over-cap group, which doubles as the report of what the cap dropped;
+    `kept` is `df` broadcast-anti-joined against it. `cap=None` disables
+    the guard and returns (df, None). A group of exactly `cap` rows is
+    kept."""
+    if cap is None:
+        return df, None
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    heavy = (
+        df.groupBy(*keys)
+        .agg(F.count("*").alias("sz"))
+        .filter(F.col("sz") > cap)
+    )
+    return df.join(F.broadcast(heavy), keys, "left_anti"), heavy
 
 
 def read_input(spark: SparkSession, path: str, fmt: "str | None" = None):

@@ -322,3 +322,20 @@ def test_containment_symmetric_on_equal_sets(spark):
     df = spark.createDataFrame([(1, t), (2, t)], "doc_id long, text string")
     r = containment_pairs(df, n=5, threshold=0.5).collect()[0]
     assert (r.id1, r.id2, r.containment, r.jaccard) == (1, 2, 1.0, 1.0)
+
+
+def test_cap_heavy_keys_boundary(spark):
+    from pdf_extractor_spark.session import cap_heavy_keys
+
+    cap = 3
+    # key "a" has exactly cap rows, key "b" has cap + 1
+    rows = [("a", i) for i in range(cap)] + [("b", i) for i in range(cap + 1)]
+    df = spark.createDataFrame(rows, "k string, v int")
+    kept, heavy = cap_heavy_keys(df, "k", cap)
+    assert sorted((r.k, r.v) for r in kept.collect()) == [
+        ("a", i) for i in range(cap)
+    ]
+    assert [(r.k, r.sz) for r in heavy.collect()] == [("b", cap + 1)]
+
+    same, none = cap_heavy_keys(df, ["k"], None)
+    assert same is df and none is None

@@ -142,3 +142,78 @@ def test_degenerate_graphs_never_crash(spark):
         assert da.n_edges == 0 and da.assortativity is None
         q = modularity(g).first()
         assert q.communities == 0 and q.q_modularity is None
+
+
+def _join_output_rows(df):
+    """(join type, has condition, numOutputRows) for every join of the
+    AQE-final executed plan, after running the query once."""
+    qe = df._jdf.queryExecution()
+    qe.toRdd().count()
+
+    def children(p):
+        it = p.children().iterator()
+        while it.hasNext():
+            yield it.next()
+
+    def walk(p):
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            yield from walk(p.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            yield from walk(p.plan())
+        else:
+            yield p
+            for c in children(p):
+                yield from walk(c)
+
+    return [
+        (
+            p.joinType().toString(),
+            p.condition().isDefined(),
+            p.metrics().get("numOutputRows").get().value(),
+        )
+        for p in walk(qe.executedPlan())
+        if "Join" in p.nodeName()
+    ]
+
+
+def test_adamic_adar_pivot_cap_bounds_wedge_join(spark):
+    # hub h linked to every node of the 60-node path n0-...-n59. With
+    # max_pivot_degree=10 the hub (deg 60) is no pivot, so the wedge
+    # self-join emits one u<v wedge for each of n0, n59 (deg 2) and
+    # three for each of n1..n58 (deg 3): 2 + 58*3 = 176. Capping after
+    # the join instead would still emit the hub's C(60,2) = 1,770.
+    import math
+    from collections import defaultdict
+
+    cap = 10
+    path = [f"n{i}" for i in range(60)]
+    edges = [("h", n) for n in path] + list(zip(path, path[1:]))
+    df = adamic_adar_topk(
+        spark.createDataFrame(edges, "src string, dst string"),
+        top_n=10_000,
+        max_pivot_degree=cap,
+    )
+    wedge = [rows for jt, cond, rows in _join_output_rows(df)
+             if jt == "Inner" and cond]
+    assert wedge == [176]
+
+    nbrs = defaultdict(set)
+    for a, b in edges:
+        nbrs[a].add(b)
+        nbrs[b].add(a)
+    want = set()
+    nodes = sorted(nbrs)
+    for i, u in enumerate(nodes):
+        for v in nodes[i + 1:]:
+            if v in nbrs[u]:
+                continue
+            ws = [w for w in nbrs[u] & nbrs[v] if len(nbrs[w]) <= cap]
+            if ws:
+                score = sum(1 / math.log(len(nbrs[w])) for w in ws)
+                want.add((u, v, len(ws), round(score, 6)))
+    got = {
+        (r.host_a, r.host_b, r.common_neighbors, r.aa_score)
+        for r in df.collect()
+    }
+    assert got == want
