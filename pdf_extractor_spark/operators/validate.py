@@ -6,7 +6,9 @@ Two implementations, used for different surfaces:
    pandas UDF that runs rule classification, template field extraction AND
    schema validation per document via the oracle (exact Python-`re`/strptime
    parity, typed values flow directly from extraction into validation like
-   in the reference). One Python crossing per batch.
+   in the reference). One Python crossing per batch. Each batch ends by
+   dropping the worker's cached zip finders (`session.drop_zip_finders`),
+   so the next task start does not re-read Spark's zips.
 
 2. `field_error_col` / `cpf_valid_col` / `cnpj_valid_col` — fully COLUMNAR
    field validators (whole-stage codegen, no Python) compiled from the same
@@ -79,6 +81,7 @@ def classify_extract_validate_udf(
         from ..oracle.extract import _field_to_string
         from ..oracle.template import extract_template_fields
         from ..oracle.validator import validate_data
+        from ..session import drop_zip_finders
 
         # keyword presence for the whole Arrow batch in one C++ pass per
         # keyword (exactness argument in keyword_presence_batch) — the
@@ -182,6 +185,7 @@ def classify_extract_validate_udf(
                             apply_custom_outcome(
                                 validation, cv, True, error=str(e)
                             )
+        drop_zip_finders()
         return pd.DataFrame(out)
 
     return _run

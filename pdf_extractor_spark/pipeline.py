@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -150,7 +151,15 @@ def metrics_rows(extracted: DataFrame, run_id: str, wave: int) -> DataFrame:
     )
 
 
+# the lineage table does not exist yet (no dir, or a dir with no parquet
+# file in it); any other read failure means it exists and is unreadable
+_NO_TABLE = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def completed_buckets(spark: SparkSession, metrics_path: str, run_id: str) -> set[int]:
+    """Buckets `run_id` has committed, from the lineage table. A missing or
+    empty table means none; an unreadable one raises, so a resume never
+    recomputes and overwrites buckets it merely failed to see."""
     try:
         rows = (
             spark.read.parquet(metrics_path)
@@ -159,8 +168,10 @@ def completed_buckets(spark: SparkSession, metrics_path: str, run_id: str) -> se
             .distinct()
             .collect()
         )
-    except Exception:
-        return set()
+    except AnalysisException as e:
+        if e.getCondition() in _NO_TABLE:
+            return set()
+        raise
     return {r.partition_id for r in rows}
 
 

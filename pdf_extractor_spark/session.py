@@ -153,6 +153,28 @@ def cap_heavy_keys(df, keys, cap: int | None):
     return df.join(F.broadcast(heavy), keys, "left_anti"), heavy
 
 
+def drop_zip_finders() -> None:
+    """Delete every `zipimport.zipimporter` from `sys.path_importer_cache`,
+    leaving `FileFinder` and `None` entries alone. Called in Python workers.
+
+    PySpark's worker calls `importlib.invalidate_caches()` at every task
+    start (`worker_util.setup_spark_files`). On CPython 3.11 and 3.12 that
+    makes each cached zipimporter re-read its archive's whole directory:
+    ~16 finders over pyspark.zip, the spark-core jar and the py4j zip,
+    ~27k entries, ~0.2 CPU-s per task whatever the task does. The archives
+    never change while a worker lives, so the re-read buys nothing; with
+    no zipimporter left in the cache there is nothing to re-read. A later
+    import from a zip rebuilds its finder from zipimport's own directory
+    cache without reading the archive again."""
+    import sys
+    import zipimport
+
+    cache = sys.path_importer_cache
+    zips = [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]
+    for path in zips:
+        del cache[path]
+
+
 def read_input(spark: SparkSession, path: str, fmt: "str | None" = None):
     """Shared spark-submit input dispatch for jobs/: 'table' = catalog /
     temp-view name, 'parquet' = path; with fmt=None, dotted slash-free
