@@ -3,6 +3,11 @@
 All fully columnar (whole-stage codegen; no Python), language detection
 included (add_detected_language).
 
+Plan building: the language and normalize layers (`_language_layers`,
+`_normalize_layers`) are built once per JVM and applied with one
+`withColumns` each, so a repeat call costs a few hundred py4j round trips
+instead of thousands.
+
 Python-regex parity (SURVEY.md §7.3-1): the reference normalizes with Python
 `re` (`strip`, `[\\x00-\\x1F\\x7F-\\x9F]`, `\\s+`). Spark regexps are Java.
 We close the gap by spelling out the exact Python whitespace set as an
@@ -13,6 +18,9 @@ tests/test_parity_regex.py over every BMP codepoint.
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -161,66 +169,46 @@ _SCRIPT_CLASSES = {
 }
 
 
-def add_detected_language(
-    df: DataFrame, sample_col: str, out_col: str = "lang"
-) -> DataFrame:
-    """Columnar port of the oracle's detect_language (oracle/language.py —
-    itself the deterministic stand-in for the reference's seeded langdetect,
-    language_detector.py:29-45): script-range counting cascade, then a
-    stopword vote over latin tokens.
+def _per_jvm(build):
+    """Memoize a Column-tree builder per JVM. A Column is an unresolved
+    expression over column names, valid for any frame in the JVM that
+    built it, so the tree is built once per process instead of once per
+    call (thousands of py4j round trips each). Only Columns are cached,
+    never a frame or anything else that depends on the input; every
+    caller gets the same tuples, so none may mutate them."""
+    cached = functools.lru_cache(maxsize=16)(lambda _jvm, *args: build(*args))
 
-    Replaces the earlier pandas-UDF detector in the hot path: one fewer
-    Python worker per task and no Arrow crossing for the sample text — the
-    whole detection stays in whole-stage codegen. Every count is a
-    materialized temp column, so the cascade duplicates only attribute refs
-    (see textstats.py on Catalyst project-collapsing).
+    @functools.wraps(build)
+    def per_jvm(*args):
+        return cached(SparkContext._jvm, *args)
 
-    Parity with the oracle is asserted per document by
-    tests/test_pipeline_spark.py::test_meta_parity over the corpus, which
-    embeds CJK/control-char/whitespace fixtures."""
+    return per_jvm
+
+
+def _apply_layers(df: DataFrame, layers, temps) -> DataFrame:
+    """One withColumns per dependency layer, then drop the temps. Each
+    layer is its own projection level, so a later layer reads the earlier
+    temps as attributes, and project-collapsing inlines a temp only where
+    that duplicates no expensive expression (see textstats.py)."""
+    for layer in layers:
+        df = df.withColumns(layer)
+    return df.drop(*temps)
+
+
+@_per_jvm
+def _language_layers(sample_col: str, out_col: str):
+    """(layers, temps) of add_detected_language: the script counts and
+    stopword hits as temps, then `out_col`. Each layer reads only earlier
+    ones; the 7 script counts share one, as do the 7 stopword hits."""
     from ..oracle.language import _STOPWORDS
 
-    sample = F.col(sample_col)
-    tmp: list[str] = []
+    sample, smp = F.col(sample_col), F.col("_smp")
+    nonascii, toks = F.col("_na"), F.col("_lt")
+    counts = {k: F.col(f"_sc_{k}") for k in _SCRIPT_CLASSES}
+    hit_cols = [F.col(f"_lh{i}") for i in range(len(_STOPWORDS))]
 
-    def col_of(name: str, expr: Column) -> Column:
-        nonlocal df
-        tmp.append(name)
-        df = df.withColumn(name, expr)
-        return F.col(name)
-
-    df = df.withColumn("_smp", F.substring(sample, 1, 2000))
-    tmp.append("_smp")
-    smp = F.col("_smp")
-
-    # ASCII short-circuit: every script class matches only non-ASCII
-    # codepoints, so for a pure-ASCII sample (most of a web corpus) all 7
-    # counts are provably 0 — one rlike scan replaces 7 regexp_count scans
-    nonascii = col_of("_na", smp.rlike("[^\\x00-\\x7f]"))
-    counts = {
-        k: col_of(
-            f"_sc_{k}",
-            F.when(nonascii, F.regexp_count(smp, F.lit(rx))).otherwise(
-                F.lit(0)
-            ),
-        )
-        for k, rx in _SCRIPT_CLASSES.items()
-    }
-    script_total = col_of(
-        "_sc_total", sum(counts.values(), F.lit(0))
-    )
-
-    # latin stopword vote: tokens of the lowered sample
-    toks = col_of(
-        "_lt", F.regexp_extract_all(F.lower(smp), F.lit("([a-zà-ÿ]+)"), 1)
-    )
     def _hits(words: tuple[str, ...]) -> Column:
         return F.size(F.filter(toks, lambda t: t.isin(*words)))
-
-    hit_cols = [
-        col_of(f"_lh{i}", _hits(tuple(sorted(words))))
-        for i, (_lang, words) in enumerate(_STOPWORDS)
-    ]
 
     # argmax with strictly-greater update, initial best = ('en', hits_en)
     # (oracle starts at best_hits=-1 so the first language always wins in)
@@ -253,10 +241,52 @@ def add_detected_language(
             | (F.length(py_strip(sample)) < 10),
             F.lit("unknown"),
         )
-        .when(script_total >= 3, script_lang)
+        .when(F.col("_sc_total") >= 3, script_lang)
         .otherwise(latin_lang)
     )
-    return df.withColumn(out_col, lang).drop(*tmp)
+    layers = (
+        {"_smp": F.substring(sample, 1, 2000)},
+        # ASCII short-circuit: every script class matches only non-ASCII
+        # codepoints, so for a pure-ASCII sample (most of a web corpus)
+        # all 7 counts are provably 0 — one rlike scan replaces 7
+        # regexp_count scans
+        {"_na": smp.rlike("[^\\x00-\\x7f]")},
+        {
+            f"_sc_{k}": F.when(
+                nonascii, F.regexp_count(smp, F.lit(rx))
+            ).otherwise(F.lit(0))
+            for k, rx in _SCRIPT_CLASSES.items()
+        },
+        {"_sc_total": sum(counts.values(), F.lit(0))},
+        # latin stopword vote: tokens of the lowered sample
+        {"_lt": F.regexp_extract_all(F.lower(smp), F.lit("([a-zà-ÿ]+)"), 1)},
+        {
+            f"_lh{i}": _hits(tuple(sorted(words)))
+            for i, (_lang, words) in enumerate(_STOPWORDS)
+        },
+        {out_col: lang},
+    )
+    return layers, tuple(name for layer in layers[:-1] for name in layer)
+
+
+def add_detected_language(
+    df: DataFrame, sample_col: str, out_col: str = "lang"
+) -> DataFrame:
+    """Columnar port of the oracle's detect_language (oracle/language.py —
+    itself the deterministic stand-in for the reference's seeded langdetect,
+    language_detector.py:29-45): script-range counting cascade, then a
+    stopword vote over latin tokens.
+
+    Replaces the earlier pandas-UDF detector in the hot path: one fewer
+    Python worker per task and no Arrow crossing for the sample text — the
+    whole detection stays in whole-stage codegen. Every count is a
+    materialized temp column, so the cascade duplicates only attribute refs
+    (see textstats.py on Catalyst project-collapsing).
+
+    Parity with the oracle is asserted per document by
+    tests/test_pipeline_spark.py::test_meta_parity over the corpus, which
+    embeds CJK/control-char/whitespace fixtures."""
+    return _apply_layers(df, *_language_layers(sample_col, out_col))
 
 
 def language_name_col(lang: Column) -> Column:
@@ -270,15 +300,12 @@ def language_name_col(lang: Column) -> Column:
     return F.coalesce(F.create_map(*pairs)[lang], lang)
 
 
-def normalize_documents(df: DataFrame) -> DataFrame:
-    """documents(doc_id, spans) -> + lang, spans (ordered & normalized with
-    `order` field), all_text, meta. The language comes from the columnar
-    detector run on the 3-span sample.
-    """
-    out = df.withColumn("_spans_sorted", sorted_spans(F.col("spans")))
-    out = out.withColumn("_sample", text_sample(F.col("_spans_sorted")))
-    out = add_detected_language(out, "_sample", "lang")
-
+@_per_jvm
+def _normalize_layers():
+    """(layers, temps) of normalize_documents: span sort, 3-span sample,
+    the language layers, then the normalized spans and the text/meta
+    columns derived from them."""
+    lang_layers, lang_temps = _language_layers("_sample", "lang")
     norm_struct = lambda s, i: F.struct(  # noqa: E731
         s["kind"].alias("kind"),
         F.when(s["kind"] == "text", preprocess_text(s["text"], F.col("lang")))
@@ -286,9 +313,6 @@ def normalize_documents(df: DataFrame) -> DataFrame:
         F.when(s["kind"] != "text", s["media_ref"]).alias("media_ref"),
         s["offset"].alias("offset"),
         i.cast("int").alias("order"),
-    )
-    out = out.withColumn(
-        "spans", F.transform(F.col("_spans_sorted"), norm_struct)
     )
     all_text = F.array_join(
         F.transform(
@@ -298,16 +322,30 @@ def normalize_documents(df: DataFrame) -> DataFrame:
         "\n",
     )
     num_pages = F.size(F.filter(F.col("spans"), lambda s: s["kind"] == "text"))
-    out = out.withColumn("all_text", all_text).withColumn(
-        "meta",
-        F.struct(
-            F.col("lang").alias("language"),
-            language_name_col(F.col("lang")).alias("language_name"),
-            num_pages.cast("int").alias("num_pages"),
-            F.lit("text").alias("extraction_method"),
-        ),
+    layers = (
+        {"_spans_sorted": sorted_spans(F.col("spans"))},
+        {"_sample": text_sample(F.col("_spans_sorted"))},
+        *lang_layers,
+        {"spans": F.transform(F.col("_spans_sorted"), norm_struct)},
+        {
+            "all_text": all_text,
+            "meta": F.struct(
+                F.col("lang").alias("language"),
+                language_name_col(F.col("lang")).alias("language_name"),
+                num_pages.cast("int").alias("num_pages"),
+                F.lit("text").alias("extraction_method"),
+            ),
+        },
     )
-    return out.drop("_spans_sorted", "_sample", "lang")
+    return layers, ("_spans_sorted", "_sample", *lang_temps, "lang")
+
+
+def normalize_documents(df: DataFrame) -> DataFrame:
+    """documents(doc_id, spans) -> + lang, spans (ordered & normalized with
+    `order` field), all_text, meta. The language comes from the columnar
+    detector run on the 3-span sample.
+    """
+    return _apply_layers(df, *_normalize_layers())
 
 
 def span_diff(

@@ -59,16 +59,10 @@ def extract_documents(
     # all_text (see classify_extract_validate_udf docstring; language
     # detection and span normalization stay fully columnar upstream)
     cev = classify_extract_validate_udf(patterns, templates, schemas)
-    out = out.withColumn("_r", cev(F.col("all_text")))
-    out = (
-        out.withColumn("doc_type", F.col("_r.doc_type"))
-        .withColumn("confidence", F.col("_r.confidence"))
-        .withColumn("fields", F.col("_r.fields"))
-        .withColumn("validation", F.col("_r.validation"))
-        .withColumn("error", F.col("_r.error"))
-        .drop("_r", "all_text")
+    fused = set(cev.returnType.fieldNames())
+    return out.withColumn("_r", cev(F.col("all_text"))).select(
+        *(f"_r.{c}" if c in fused else c for c in OUTPUT_COLUMNS)
     )
-    return out.select(*OUTPUT_COLUMNS)
 
 
 def bucket_col(
@@ -219,9 +213,7 @@ def run_pipeline(
             wave_buckets, salts, shuffle_n,
         )
         stage = transform if transform is not None else extract_documents
-        extracted = stage(subset).withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)).cast("int")
-        )
+        extracted = stage(subset).withColumn("bucket", bucket_col(num_buckets))
         # persist the wave once: the SAME materialized rows feed the data
         # write and the metrics write (previously the metrics pass re-read
         # the just-written parquet from disk — correct but a full extra
