@@ -21,8 +21,11 @@ counts.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -55,6 +58,39 @@ def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = _t(spark, sf_dir, name)
     key = "doc_id" if "doc_id" in df.columns else df.columns[0]
     return df.repartition(spark.sparkContext.defaultParallelism, key)
+
+
+# Write-once index state (the jobs/run_index.py discipline): centroids,
+# codebooks, trained rules and weights, signature, pair and bucket tables
+# are built once per (artifact, corpus, build parameters) per process and
+# read by every later query. Every build is deterministic, so reuse cannot
+# change results.
+_INDEX_STATE: dict = {}
+
+
+def _index_state(name, sf_dir, build, *params):
+    """Artifact `name` of the corpus at `sf_dir`: `build(*params)` runs
+    once per (name, corpus path, params) key; later calls return the
+    stored value."""
+    key = (name, os.path.abspath(sf_dir), *params)
+    if key not in _INDEX_STATE:
+        _INDEX_STATE[key] = build(*params)
+    return _INDEX_STATE[key]
+
+
+def _persisted(spark, name, sf_dir, build, *params):
+    """Artifact `name` as a persisted parquet table: the frame
+    `build(*params)` returns is written once per key into a temp
+    directory that is removed at exit; every call reads the parquet."""
+
+    def write(*params):
+        tmp = tempfile.mkdtemp(prefix=f"{name}_")
+        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+        path = os.path.join(tmp, name)
+        build(*params).write.mode("overwrite").parquet(path)
+        return path
+
+    return spark.read.parquet(_index_state(name, sf_dir, write, *params))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -514,9 +550,6 @@ def _winnow_pairs(spark, sf_dir):
     )
 
 
-_MINHASH_SIG_CACHE: dict = {}
-
-
 def _minhash_sigs_persisted(spark, sf_dir):
     """(id, sig) MinHash signature table AS PERSISTED INDEX STATE (the
     jobs/run_index.py `minhash_signatures/` artifact): the corpus-sized
@@ -526,23 +559,12 @@ def _minhash_sigs_persisted(spark, sf_dir):
     as `neardup_pairs/` / `lattice_pieces/` / `bpe_word_pieces/`)."""
     from pdf_extractor_spark.operators.dedup import minhash_signatures
 
-    key = os.path.abspath(sf_dir)
-    path = _MINHASH_SIG_CACHE.get(key)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        tmp = tempfile.mkdtemp(prefix="minhash_sigs_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        path = os.path.join(tmp, "minhash_signatures")
-        minhash_signatures(
+    def build():
+        return minhash_signatures(
             _t_wide(spark, sf_dir, "documents"), n=3, num_hashes=64
-        ).filter(F.col("sig").isNotNull()).write.mode("overwrite").parquet(
-            path
-        )
-        _MINHASH_SIG_CACHE[key] = path
-    return spark.read.parquet(path)
+        ).filter(F.col("sig").isNotNull())
+
+    return _persisted(spark, "minhash_signatures", sf_dir, build)
 
 
 def _minhash_lsh(spark, sf_dir):
@@ -561,9 +583,6 @@ def _minhash_lsh(spark, sf_dir):
     )
 
 
-_SIMHASH_SIG_CACHE: dict = {}
-
-
 def _simhash_sigs_persisted(spark, sf_dir):
     """(id, simhash) signature table AS PERSISTED INDEX STATE (the
     jobs/run_index.py `simhash_signatures/` artifact): the corpus token
@@ -572,21 +591,10 @@ def _simhash_sigs_persisted(spark, sf_dir):
     explode + bucket aggregate (the `minhash_signatures/` discipline)."""
     from pdf_extractor_spark.operators.dedup import simhash64
 
-    key = os.path.abspath(sf_dir)
-    path = _SIMHASH_SIG_CACHE.get(key)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        tmp = tempfile.mkdtemp(prefix="simhash_sigs_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        path = os.path.join(tmp, "simhash_signatures")
-        simhash64(_t_wide(spark, sf_dir, "documents")).write.mode(
-            "overwrite"
-        ).parquet(path)
-        _SIMHASH_SIG_CACHE[key] = path
-    return spark.read.parquet(path)
+    return _persisted(
+        spark, "simhash_signatures", sf_dir,
+        lambda: simhash64(_t_wide(spark, sf_dir, "documents")),
+    )
 
 
 def _simhash(spark, sf_dir):
@@ -709,26 +717,36 @@ def _lsh_ann(spark, sf_dir):
     return lsh_topk(emb, q, dim=64, k=10, bits=6, tables=6)
 
 
-_IVF_CENTROID_CACHE: dict = {}
+def _centroids(spark, sf_dir, k, refine_iters=1, augmented=False):
+    """IVF / k-means centroids as index state: K deterministic coarse
+    centroids after `refine_iters` Lloyd iterations over the embeddings
+    (or `_augmented_embeddings`), built once per (corpus, K, iterations,
+    input) and shared by every query that quantizes with them."""
+    from pdf_extractor_spark.operators.similarity import ivf_centroids
+
+    def build(k, refine_iters, augmented):
+        emb = (
+            _augmented_embeddings(spark, sf_dir)
+            if augmented
+            else _t(spark, sf_dir, "embeddings")
+        )
+        return ivf_centroids(emb, k, refine_iters=refine_iters)
+
+    return _index_state(
+        "ivf_centroids", sf_dir, build, k, refine_iters, augmented
+    )
 
 
 def _ivf_ann(spark, sf_dir):
     """IVF coarse-quantizer ANN top-k with precomputed centroids."""
-    from pdf_extractor_spark.operators.similarity import ivf_centroids, ivf_topk
+    from pdf_extractor_spark.operators.similarity import ivf_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    # centroids are index state: built once per (corpus, K) and reused —
-    # deterministic, so caching cannot change results
-    key = (os.path.abspath(sf_dir), 16)
-    cents = _IVF_CENTROID_CACHE.get(key)
-    if cents is None:
-        cents = ivf_centroids(emb, 16)
-        _IVF_CENTROID_CACHE[key] = cents
     q = emb.filter(F.col("vec_id") < 5).withColumnRenamed("vec_id", "query_id")
-    return ivf_topk(emb, q, k=10, n_centroids=16, n_probe=8, centroids=cents)
-
-
-_PQ_BOOKS_CACHE: dict = {}
+    return ivf_topk(
+        emb, q, k=10, n_centroids=16, n_probe=8,
+        centroids=_centroids(spark, sf_dir, 16),
+    )
 
 
 def _pq_books(spark, sf_dir):
@@ -738,12 +756,10 @@ def _pq_books(spark, sf_dir):
     both engines read bit-identical codebooks."""
     from pdf_extractor_spark.operators.similarity import pq_codebooks
 
-    key = os.path.abspath(sf_dir)
-    books = _PQ_BOOKS_CACHE.get(key)
-    if books is None:
-        books = pq_codebooks(_t(spark, sf_dir, "embeddings"), m=8, ks=16)
-        _PQ_BOOKS_CACHE[key] = books
-    return books
+    return _index_state(
+        "pq_codebooks", sf_dir,
+        lambda: pq_codebooks(_t(spark, sf_dir, "embeddings"), m=8, ks=16),
+    )
 
 
 def _pq_encode(spark, sf_dir):
@@ -803,23 +819,16 @@ def _ivfpq_ann_topk(spark, sf_dir):
     ADC-scores only those lists' code rows — `ivf_topk`'s probe cost at
     `pq_adc_topk`'s byte cost, the 10^12-vector index shape. Centroids
     and codebooks are cached index state; round-before-rank at 6 dp."""
-    from pdf_extractor_spark.operators.similarity import (
-        ivf_centroids,
-        ivfpq_topk,
-    )
+    from pdf_extractor_spark.operators.similarity import ivfpq_topk
 
     emb = _t(spark, sf_dir, "embeddings")
-    key = (os.path.abspath(sf_dir), 16)
-    cents = _IVF_CENTROID_CACHE.get(key)
-    if cents is None:
-        cents = ivf_centroids(emb, 16)
-        _IVF_CENTROID_CACHE[key] = cents
     q = emb.filter(F.col("vec_id") < 8).withColumnRenamed(
         "vec_id", "query_id"
     )
     return ivfpq_topk(
         emb, q, k=10, n_centroids=16, n_probe=8,
-        centroids=cents, books=_pq_books(spark, sf_dir),
+        centroids=_centroids(spark, sf_dir, 16),
+        books=_pq_books(spark, sf_dir),
     )
 
 
@@ -832,20 +841,14 @@ def _ann_recall_eval(spark, sf_dir):
     deployment runs before choosing its operating point; hits/totals
     are exact integers, recall is one double division."""
     from pdf_extractor_spark.operators.similarity import (
-        _dot,
         cosine_topk,
-        ivf_centroids,
         ivf_topk,
         ivfpq_topk,
         pq_adc_topk,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    key = (os.path.abspath(sf_dir), 16)
-    cents = _IVF_CENTROID_CACHE.get(key)
-    if cents is None:
-        cents = ivf_centroids(emb, 16)
-        _IVF_CENTROID_CACHE[key] = cents
+    cents = _centroids(spark, sf_dir, 16)
     books = _pq_books(spark, sf_dir)
     q5 = emb.filter(F.col("vec_id") < 5).withColumnRenamed(
         "vec_id", "query_id"
@@ -934,18 +937,12 @@ def _mutual_knn(spark, sf_dir):
     the hub-robust alignment filter (b in a's kNN AND a in b's), at
     semdedup's cluster-bounded-quadratic cost. Cached centroids;
     4-dp round-before-rank."""
-    from pdf_extractor_spark.operators.similarity import (
-        ivf_centroids,
-        mutual_knn,
-    )
+    from pdf_extractor_spark.operators.similarity import mutual_knn
 
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (os.path.abspath(sf_dir), 16)
-    cents = _IVF_CENTROID_CACHE.get(key)
-    if cents is None:
-        cents = ivf_centroids(emb, 16)
-        _IVF_CENTROID_CACHE[key] = cents
-    return mutual_knn(emb, k=5, n_centroids=16, centroids=cents)
+    return mutual_knn(
+        _t(spark, sf_dir, "embeddings"), k=5, n_centroids=16,
+        centroids=_centroids(spark, sf_dir, 16),
+    )
 
 
 def _augmented_embeddings(spark, sf_dir):
@@ -985,15 +982,13 @@ def _semdedup(spark, sf_dir):
     ~0.47): K=16 deterministic coarse centroids over the augmented set,
     within-cluster pairwise cosine >= 0.95 drops the later id. Centroids
     are index state, cached like ivf_ann_topk's."""
-    from pdf_extractor_spark.operators.similarity import ivf_centroids, semdedup
+    from pdf_extractor_spark.operators.similarity import semdedup
 
-    emb = _augmented_embeddings(spark, sf_dir)
-    key = (os.path.abspath(sf_dir), "aug16")
-    cents = _IVF_CENTROID_CACHE.get(key)
-    if cents is None:
-        cents = ivf_centroids(emb, 16)
-        _IVF_CENTROID_CACHE[key] = cents
-    return semdedup(emb, cents, threshold=0.95)
+    return semdedup(
+        _augmented_embeddings(spark, sf_dir),
+        _centroids(spark, sf_dir, 16, augmented=True),
+        threshold=0.95,
+    )
 
 
 def _kmeans_clusters(spark, sf_dir):
@@ -1002,36 +997,25 @@ def _kmeans_clusters(spark, sf_dir):
     surface behind cluster-balanced sampling / SemDeDup / IVF builds.
     The oracle replays both Lloyd rounds in SQL (the ivf_ann_topk pattern
     unrolled once more)."""
-    from pdf_extractor_spark.operators.similarity import (
-        ivf_centroids,
-        kmeans_cluster_stats,
-    )
+    from pdf_extractor_spark.operators.similarity import kmeans_cluster_stats
 
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (os.path.abspath(sf_dir), "kmeans8x2")
-    cents = _IVF_CENTROID_CACHE.get(key)
-    if cents is None:
-        cents = ivf_centroids(emb, 8, refine_iters=2)
-        _IVF_CENTROID_CACHE[key] = cents
-    return kmeans_cluster_stats(emb, n_clusters=8, centroids=cents)
+    return kmeans_cluster_stats(
+        _t(spark, sf_dir, "embeddings"), n_clusters=8,
+        centroids=_centroids(spark, sf_dir, 8, refine_iters=2),
+    )
 
 
 def _cluster_balanced_sample(spark, sf_dir):
     """Cluster-balanced diversity sample: nearest-centroid assignment
     (cached kmeans8x2 centroids, kmeans_clusters' index state) + quota-16
     per-cluster pick under a seeded md5 order."""
-    from pdf_extractor_spark.operators.similarity import (
-        cluster_balanced_sample,
-        ivf_centroids,
-    )
+    from pdf_extractor_spark.operators.similarity import cluster_balanced_sample
 
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (os.path.abspath(sf_dir), "kmeans8x2")
-    cents = _IVF_CENTROID_CACHE.get(key)
-    if cents is None:
-        cents = ivf_centroids(emb, 8, refine_iters=2)
-        _IVF_CENTROID_CACHE[key] = cents
-    return cluster_balanced_sample(emb, cents, quota=16)
+    return cluster_balanced_sample(
+        _t(spark, sf_dir, "embeddings"),
+        _centroids(spark, sf_dir, 8, refine_iters=2),
+        quota=16,
+    )
 
 
 def _fuzzy_name_match(spark, sf_dir):
@@ -1786,9 +1770,6 @@ def _cc_hosts(spark, sf_dir):
     )
 
 
-_CC_BASE_CACHE: dict = {}
-
-
 def _cc_incremental(spark, sf_dir):
     """Incremental CC: the chain edges form the BASE assignment (path
     segments) AS PERSISTED INDEX STATE (the minhash_signatures/
@@ -1818,21 +1799,12 @@ def _cc_incremental(spark, sf_dir):
     bridge = us.filter(u % 29 == 3).select(
         h(u).alias("src"), h(u + 13).alias("dst")
     )
-    key = os.path.abspath(sf_dir)
-    path = _CC_BASE_CACHE.get(key)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        tmp = tempfile.mkdtemp(prefix="cc_base_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        path = os.path.join(tmp, "cc_base_labels")
-        connected_components_contract(chain, n_groups=1).select(
+    base = _persisted(
+        spark, "cc_base_labels", sf_dir,
+        lambda: connected_components_contract(chain, n_groups=1).select(
             "host", "component"
-        ).write.mode("overwrite").parquet(path)
-        _CC_BASE_CACHE[key] = path
-    base = spark.read.parquet(path)
+        ),
+    )
     return connected_components_incremental(base, bridge, n_groups=1)
 
 
@@ -2020,20 +1992,11 @@ def _incremental_dedup(spark, sf_dir):
     return incremental_dedup(docs, seen)
 
 
-_LSH_INDEX_CACHE: dict = {}
-_NEARDUP_PAIRS_CACHE: dict = {}
-_TRAINED_LR_CACHE: dict = {}
-
 # weak-supervision teacher for the trained hashed-BoW model (the regex
 # rule a rules pass yields for free; jobs/run_train.py --keyword spark)
 _LR_TEACHER = lambda: F.coalesce(F.col("text"), F.lit("")).rlike(  # noqa: E731
     r"\bspark\b"
 )
-
-
-_HOST_RANKS_CACHE: dict = {}
-_LATTICE_VOCAB_CACHE: dict = {}
-_LATTICE_PIECES_CACHE: dict = {}
 
 
 def _lattice_vocab_list(spark, sf_dir):
@@ -2043,25 +2006,14 @@ def _lattice_vocab_list(spark, sf_dir):
     (same class as the hash_lr weights / dsir models)."""
     from pdf_extractor_spark.operators.curation import lattice_vocab
 
-    key = os.path.abspath(sf_dir)
-    v = _LATTICE_VOCAB_CACHE.get(key)
-    if v is None:
-        import atexit
-        import shutil
-        import tempfile
+    def build():
+        vocab = _persisted(
+            spark, "lattice_vocab", sf_dir,
+            lambda: lattice_vocab(_t(spark, sf_dir, "documents")),
+        )
+        return [(r["piece"], r["cnt"]) for r in vocab.collect()]
 
-        tmp = tempfile.mkdtemp(prefix="lattice_vocab_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        path = os.path.join(tmp, "lattice_vocab")
-        lattice_vocab(_t(spark, sf_dir, "documents")).write.mode(
-            "overwrite"
-        ).parquet(path)
-        v = [
-            (r["piece"], r["cnt"])
-            for r in spark.read.parquet(path).collect()
-        ]
-        _LATTICE_VOCAB_CACHE[key] = v
-    return v
+    return _index_state("lattice_vocab_list", sf_dir, build)
 
 
 def _lattice_pieces_persisted(spark, sf_dir):
@@ -2076,17 +2028,7 @@ def _lattice_pieces_persisted(spark, sf_dir):
         tokens_col,
     )
 
-    key = os.path.abspath(sf_dir)
-    path = _LATTICE_PIECES_CACHE.get(key)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        tmp = tempfile.mkdtemp(prefix="lattice_pieces_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        path = os.path.join(tmp, "lattice_pieces")
-        vocab = _lattice_vocab_list(spark, sf_dir)
+    def build():
         words = (
             _t(spark, sf_dir, "documents")
             .select(
@@ -2094,11 +2036,9 @@ def _lattice_pieces_persisted(spark, sf_dir):
             )
             .distinct()
         )
-        _lattice_word_pieces(words, vocab).write.mode(
-            "overwrite"
-        ).parquet(path)
-        _LATTICE_PIECES_CACHE[key] = path
-    return spark.read.parquet(path)
+        return _lattice_word_pieces(words, _lattice_vocab_list(spark, sf_dir))
+
+    return _persisted(spark, "lattice_pieces", sf_dir, build)
 
 
 def _host_ranks_persisted(spark, sf_dir):
@@ -2109,27 +2049,20 @@ def _host_ranks_persisted(spark, sf_dir):
     re-running the power iterations per invocation."""
     from pdf_extractor_spark.operators.graph import hits, pagerank
 
-    key = os.path.abspath(sf_dir)
-    paths = _HOST_RANKS_CACHE.get(key)
-    if paths is None:
-        import atexit
-        import shutil
-        import tempfile
+    def edges():
+        return _host_graph_edges(_t_wide(spark, sf_dir, "documents"))
 
-        tmp = tempfile.mkdtemp(prefix="host_ranks_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        edges = _host_graph_edges(_t_wide(spark, sf_dir, "documents"))
-        pr_path = os.path.join(tmp, "pagerank")
-        ht_path = os.path.join(tmp, "hits")
-        pagerank(edges, iters=3, damping=0.85).withColumnRenamed(
+    pr = _persisted(
+        spark, "pagerank", sf_dir,
+        lambda: pagerank(edges(), iters=3, damping=0.85).withColumnRenamed(
             "node", "host"
-        ).write.mode("overwrite").parquet(pr_path)
-        hits(edges, iters=2).withColumnRenamed("node", "host").write.mode(
-            "overwrite"
-        ).parquet(ht_path)
-        paths = (pr_path, ht_path)
-        _HOST_RANKS_CACHE[key] = paths
-    return spark.read.parquet(paths[0]), spark.read.parquet(paths[1])
+        ),
+    )
+    ht = _persisted(
+        spark, "hits", sf_dir,
+        lambda: hits(edges(), iters=2).withColumnRenamed("node", "host"),
+    )
+    return pr, ht
 
 
 def _trained_lr_weights(spark, sf_dir):
@@ -2139,28 +2072,18 @@ def _trained_lr_weights(spark, sf_dir):
     refitting inline."""
     from pdf_extractor_spark.operators.textstats import train_hash_lr_weights
 
-    key = os.path.abspath(sf_dir)
-    w = _TRAINED_LR_CACHE.get(key)
-    if w is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        tmp = tempfile.mkdtemp(prefix="hash_lr_model_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        path = os.path.join(tmp, "hash_lr_weights")
+    def build():
         docs = _t(spark, sf_dir, "documents").withColumn(
             "_label", _LR_TEACHER()
         )
-        train_hash_lr_weights(docs, "_label").write.mode(
-            "overwrite"
-        ).parquet(path)
-        rows = sorted(
-            spark.read.parquet(path).collect(), key=lambda r: r["bucket"]
+        weights = _persisted(
+            spark, "hash_lr_weights", sf_dir,
+            lambda: train_hash_lr_weights(docs, "_label"),
         )
-        w = [r["weight"] for r in rows]
-        _TRAINED_LR_CACHE[key] = w
-    return w
+        rows = sorted(weights.collect(), key=lambda r: r["bucket"])
+        return [r["weight"] for r in rows]
+
+    return _index_state("hash_lr_weight_list", sf_dir, build)
 
 
 def _neardup_pairs_persisted(spark, sf_dir):
@@ -2174,22 +2097,13 @@ def _neardup_pairs_persisted(spark, sf_dir):
     incremental-LSH bucket index."""
     from pdf_extractor_spark.operators.dedup import minhash_lsh_pairs
 
-    key = (os.path.abspath(sf_dir), 3, 64, 16, 0.7)
-    path = _NEARDUP_PAIRS_CACHE.get(key)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
+    def build():
+        return minhash_lsh_pairs(
+            _t_wide(spark, sf_dir, "documents"),
+            n=3, num_hashes=64, bands=16, threshold=0.7,
+        )
 
-        tmp = tempfile.mkdtemp(prefix="neardup_pairs_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        path = os.path.join(tmp, "neardup_pairs")
-        docs = _t_wide(spark, sf_dir, "documents")
-        minhash_lsh_pairs(
-            docs, n=3, num_hashes=64, bands=16, threshold=0.7
-        ).write.mode("overwrite").parquet(path)
-        _NEARDUP_PAIRS_CACHE[key] = path
-    return spark.read.parquet(path)
+    return _persisted(spark, "neardup_pairs", sf_dir, build)
 
 
 def _incremental_lsh_dedup(spark, sf_dir):
@@ -2218,32 +2132,24 @@ def _incremental_lsh_dedup(spark, sf_dir):
     # ONE copy of the banding parameters: the persisted buckets and the
     # batch-side probe must agree or the equi-join silently goes empty.
     num_hashes, bands = 64, 16
-    key = (os.path.abspath(sf_dir), num_hashes, bands)
-    path = _LSH_INDEX_CACHE.get(key)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
 
-        tmp = tempfile.mkdtemp(prefix="lsh_index_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        path = os.path.join(tmp, "minhash_buckets")
+    def build(num_hashes, bands):
         si = minhash_signatures(index, num_hashes=num_hashes).filter(
             F.col("sig").isNotNull()
         )
-        _banded_buckets(
+        return _banded_buckets(
             si, bands=bands, rows_per_band=num_hashes // bands
-        ).select("band", "bucket", F.col("id").alias("doc_id")).write.mode(
-            "overwrite"
-        ).parquet(path)
-        _LSH_INDEX_CACHE[key] = path
+        ).select("band", "bucket", F.col("id").alias("doc_id"))
+
     return incremental_minhash_pairs(
         batch,
         index,
         num_hashes=num_hashes,
         bands=bands,
         threshold=0.7,
-        index_buckets=spark.read.parquet(path),
+        index_buckets=_persisted(
+            spark, "minhash_buckets", sf_dir, build, num_hashes, bands
+        ),
     )
 
 
@@ -4557,21 +4463,17 @@ def _bpe_merges(spark, sf_dir):
     return bpe_merges(_t_wide(spark, sf_dir, "documents"), n_merges=3)
 
 
-_BPE_RULE_CACHE: dict = {}
-
-
 def _bpe_rules(docs, sf_dir, n_merges=3):
     """Train-once BPE merge rules as cached index state (the IVF-centroid
     pattern): deterministic per (corpus, n_merges), so re-invocations pay
     only the apply pass — exactly how a production tokenizer ships."""
     from pdf_extractor_spark.operators.curation import _bpe_trained_rules
 
-    key = (os.path.abspath(sf_dir), n_merges)
-    rules = _BPE_RULE_CACHE.get(key)
-    if rules is None:
-        rules = _bpe_trained_rules(docs, "text", "doc_id", n_merges, None)
-        _BPE_RULE_CACHE[key] = rules
-    return rules
+    return _index_state(
+        "bpe_rules", sf_dir,
+        lambda n: _bpe_trained_rules(docs, "text", "doc_id", n, None),
+        n_merges,
+    )
 
 
 def _bpe_encode(spark, sf_dir):
@@ -4586,9 +4488,6 @@ def _bpe_encode(spark, sf_dir):
     return bpe_encode(docs, rules=_bpe_rules(docs, sf_dir))
 
 
-_BPE_PIECES_CACHE: dict = {}
-
-
 def _bpe_word_pieces_persisted(spark, sf_dir):
     """Per-word encoded table (w, wf, syms) AS PERSISTED INDEX STATE
     (the jobs/run_index.py `bpe_word_pieces/` artifact, same discipline
@@ -4597,22 +4496,11 @@ def _bpe_word_pieces_persisted(spark, sf_dir):
     vocabulary query is a vocabulary-sized rollup over the parquet."""
     from pdf_extractor_spark.operators.curation import bpe_word_pieces
 
-    key = os.path.abspath(sf_dir)
-    path = _BPE_PIECES_CACHE.get(key)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        tmp = tempfile.mkdtemp(prefix="bpe_word_pieces_")
-        atexit.register(shutil.rmtree, tmp, ignore_errors=True)
-        path = os.path.join(tmp, "bpe_word_pieces")
+    def build():
         docs = _t_wide(spark, sf_dir, "documents")
-        bpe_word_pieces(docs, rules=_bpe_rules(docs, sf_dir)).write.mode(
-            "overwrite"
-        ).parquet(path)
-        _BPE_PIECES_CACHE[key] = path
-    return spark.read.parquet(path)
+        return bpe_word_pieces(docs, rules=_bpe_rules(docs, sf_dir))
+
+    return _persisted(spark, "bpe_word_pieces", sf_dir, build)
 
 
 def _bpe_vocab(spark, sf_dir):
@@ -5245,18 +5133,12 @@ def _host_outlink_jaccard(spark, sf_dir):
 def _cluster_purity(spark, sf_dir):
     """External validation of the kmeans8x2 clustering against the
     embeddings' ground-truth label column."""
-    from pdf_extractor_spark.operators.similarity import (
-        cluster_label_purity,
-        ivf_centroids,
-    )
+    from pdf_extractor_spark.operators.similarity import cluster_label_purity
 
-    emb = _t(spark, sf_dir, "embeddings")
-    key = (os.path.abspath(sf_dir), "kmeans8x2")
-    cents = _IVF_CENTROID_CACHE.get(key)
-    if cents is None:
-        cents = ivf_centroids(emb, 8, refine_iters=2)
-        _IVF_CENTROID_CACHE[key] = cents
-    return cluster_label_purity(emb, n_clusters=8, centroids=cents)
+    return cluster_label_purity(
+        _t(spark, sf_dir, "embeddings"), n_clusters=8,
+        centroids=_centroids(spark, sf_dir, 8, refine_iters=2),
+    )
 
 
 def _regional_top_parts(spark, sf_dir):

@@ -156,10 +156,10 @@ def classify_extract_validate_udf(
                 )
 
         # vectorized custom validations: one DuckDB query per (schema,
-        # condition) per batch; per-row fallback preserves the reference's
-        # row-level exception->warning semantics if the batch form fails
+        # condition) per batch; if the batch form fails, each row runs as
+        # a one-row batch, which keeps the reference's row-level
+        # exception->warning semantics
         from ..oracle.validator import (
-            _eval_condition_sql,
             apply_custom_outcome,
             eval_condition_sql_batch,
         )
@@ -177,9 +177,9 @@ def classify_extract_validate_udf(
                 except Exception:
                     for _i, f, validation in entries:
                         try:
-                            ok = _eval_condition_sql(
-                                cv["condition_sql"], f, schema
-                            )
+                            ok = eval_condition_sql_batch(
+                                cv["condition_sql"], [f], schema
+                            )[0]
                             apply_custom_outcome(validation, cv, ok)
                         except Exception as e:
                             apply_custom_outcome(

@@ -11,6 +11,7 @@ observable output (errors/warnings maps).
 
 from __future__ import annotations
 
+import math
 import os
 import re
 from datetime import datetime
@@ -200,10 +201,11 @@ def validate_data(
     """-> {valid, errors{field: msg}, warnings{field: msg}}.
     Reference validator.py:235-324 single-record path.
 
-    apply_custom=False skips the custom-validation pass — used by the Spark
-    UDF, which evaluates the SQL conditions VECTORIZED (one DuckDB query per
-    Arrow batch via eval_condition_sql_batch) instead of ~1.4 ms per
-    document here, then applies outcomes with apply_custom_outcome."""
+    Custom validations go through eval_condition_sql_batch with a
+    one-row batch, the evaluator the Spark UDF runs per Arrow batch, so
+    both read a field the same way. apply_custom=False skips them — used
+    by the UDF, which evaluates each condition once per batch and then
+    applies outcomes with apply_custom_outcome."""
     result = {"valid": True, "errors": {}, "warnings": {}}
 
     for field_name, fs in schema.fields.items():
@@ -232,7 +234,9 @@ def validate_data(
     if apply_custom:
         for cv in schema.custom_validations:
             try:
-                ok = _eval_condition_sql(cv["condition_sql"], data, schema)
+                ok = eval_condition_sql_batch(
+                    cv["condition_sql"], [data], schema
+                )[0]
                 apply_custom_outcome(result, cv, ok)
             except Exception as e:
                 apply_custom_outcome(result, cv, True, error=str(e))
@@ -257,16 +261,19 @@ def apply_custom_outcome(
 
 
 def _coerce_numeric(v):
-    """The condition binding coercion (shared by per-row and batch eval):
-    strings via float(',','.'), numerics pass, everything else NULL."""
+    """The one binding of a condition's fields (eval_condition_sql_batch,
+    for a batch and a single record alike): strings via float(',','.'),
+    numerics pass, everything else NULL. A NaN, e.g. from "nan", is NULL
+    too."""
     if isinstance(v, str):
         try:
-            return float(v.replace(",", "."))
+            v = float(v.replace(",", "."))
         except ValueError:
             return None
     if isinstance(v, bool) or not isinstance(v, (int, float)):
         return None
-    return float(v)
+    v = float(v)
+    return None if math.isnan(v) else v
 
 
 _DUCK: tuple | None = None  # (pid, connection) of this process
@@ -286,25 +293,28 @@ def _duck_connection():
 def eval_condition_sql_batch(
     condition_sql: str, rows: list[dict], schema: ValidationSchema
 ) -> list[bool]:
-    """Vectorized twin of _eval_condition_sql: bind the whole batch as one
-    DuckDB-registered frame and evaluate the condition ONCE (ORDER BY a row
-    index so output order is guaranteed). ~1000x less per-doc overhead than
-    a query per record; identical semantics (NULL result -> False). The
-    connection is the process's one (a connect + close per call costs as
-    much as the query on a 1,250-row batch); the frame is unregistered
-    even if the condition fails."""
-    import pandas as pd
+    """The one custom-validation evaluator: bind the rows as one
+    DuckDB-registered Arrow table (fields coerced by _coerce_numeric,
+    missing -> NULL, so conditions use coalesce()) and evaluate the
+    condition ONCE (ORDER BY a row index so output order is guaranteed);
+    a NULL result is False. A single record is a one-row batch. Arrow,
+    not pandas: registering a pandas frame costs ~2 ms more per call,
+    which a one-row batch pays per record. The connection is the
+    process's one (a connect + close per call costs as much as the query
+    on a 1,250-row batch); the table is unregistered even if the
+    condition fails."""
+    import pyarrow as pa
 
     keys = set(schema.fields)
     for r in rows:
         keys |= set(r)
-    df = pd.DataFrame(
-        {k: [_coerce_numeric(r.get(k)) for r in rows] for k in sorted(keys)},
-        dtype="float64",
-    )
-    df["__rid"] = range(len(rows))
+    cols = {
+        k: pa.array([_coerce_numeric(r.get(k)) for r in rows], pa.float64())
+        for k in sorted(keys)
+    }
+    cols["__rid"] = pa.array(range(len(rows)), pa.int64())
     con = _duck_connection()
-    con.register("batch", df)
+    con.register("batch", pa.table(cols))
     try:
         out = con.execute(
             f"SELECT ({condition_sql}) FROM batch ORDER BY __rid"
@@ -312,30 +322,3 @@ def eval_condition_sql_batch(
     finally:
         con.unregister("batch")
     return [bool(x[0]) for x in out]
-
-
-def _eval_condition_sql(
-    condition_sql: str, data: dict, schema: ValidationSchema
-) -> bool:
-    """Driver-side oracle evaluation of the (restricted) SQL condition via
-    DuckDB, binding record fields as numeric columns (missing/non-numeric ->
-    NULL, so conditions use coalesce()). Spark evaluates the identical string
-    with F.expr() — both engines see ANSI SQL."""
-    import duckdb
-
-    cols = []
-    params = []
-    for k in sorted(set(schema.fields) | set(data)):
-        v = data.get(k)
-        if isinstance(v, str):
-            try:
-                v = float(v.replace(",", "."))
-            except ValueError:
-                v = None
-        if isinstance(v, bool) or not isinstance(v, (int, float)):
-            v = None
-        cols.append(f'?::DOUBLE AS "{k}"')
-        params.append(v)
-    sql = f"SELECT ({condition_sql}) FROM (SELECT {', '.join(cols)})"
-    out = duckdb.execute(sql, params).fetchone()[0]
-    return bool(out)

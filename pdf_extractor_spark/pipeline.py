@@ -83,6 +83,29 @@ def with_bucket_and_salt(
     )
 
 
+def _check_input_buckets(docs: DataFrame, num_buckets: int) -> None:
+    """Raise ValueError if an input that carries its own `bucket` column
+    holds a bucket value outside 0..num_buckets-1, or a null one. The
+    waves only read those buckets, so such rows (an input written with
+    write_bucketed_input(..., 16) and run with 8) would never be
+    extracted. On a bucket=N partitioned input the predicate is a
+    partition filter: a valid input prunes every file and reads no data.
+    Any other bucket column costs one scan. An input without a bucket
+    column is not touched."""
+    if "bucket" not in docs.columns:
+        return
+    b = F.col("bucket")
+    bad = docs.select(b).filter(
+        b.isNull() | (b < 0) | (b >= num_buckets)
+    ).first()
+    if bad is not None:
+        raise ValueError(
+            f"input holds bucket {bad['bucket']}, outside 0..{num_buckets - 1}"
+            f" (num_buckets={num_buckets}): bucket the input with the run's"
+            " num_buckets"
+        )
+
+
 def write_bucketed_input(
     docs: DataFrame, path: str, num_buckets: int = DEFAULT_BUCKETS
 ) -> None:
@@ -185,7 +208,9 @@ def run_pipeline(
     """Run the full job with per-bucket checkpointing. Returns summary stats.
 
     fail_after_wave simulates a mid-job crash (for resume tests): raises
-    after committing that wave.
+    after committing that wave. An input whose own bucket column holds a
+    value outside 0..num_buckets-1, or a null, raises ValueError before
+    the first wave (see _check_input_buckets).
 
     transform/metrics_fn generalize the machinery beyond extraction: any
     per-doc columnar stage that preserves doc_id rides the same bucketed
@@ -193,6 +218,7 @@ def run_pipeline(
     transform: DataFrame -> DataFrame; metrics_fn: (df, run_id, wave) ->
     lineage rows with a partition_id column. Defaults = the extraction
     pipeline."""
+    _check_input_buckets(docs, num_buckets)
     data_path = os.path.join(out_dir, "extracted")
     metrics_path = os.path.join(out_dir, "metrics")
 

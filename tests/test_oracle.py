@@ -291,6 +291,26 @@ def test_validate_data_custom_validation_sql():
     assert result["valid"] is True  # severity=warning
 
 
+@pytest.mark.parametrize("total", ["nan", "NaN"])
+def test_custom_validation_nan_field_same_per_row_and_batch(total):
+    """A NaN field binds as NULL for one record exactly as in a batch (the
+    fused UDF's path): coalesce(total_value, 0) reads 0, so the all-absent
+    components add up and total_consistency holds, even when another row
+    of the batch fails it."""
+    from pdf_extractor_spark.oracle.validator import eval_condition_sql_batch
+
+    schema = load_schemas()["invoice_schema"]
+    cv = next(
+        c for c in schema.custom_validations if c["name"] == "total_consistency"
+    )
+    row = {"total_value": total}
+    batch = eval_condition_sql_batch(
+        cv["condition_sql"], [row, {"total_value": 5.0}], schema
+    )
+    assert batch == [True, False]
+    assert "total_consistency" not in validate_data(row, schema)["warnings"]
+
+
 # --- template extraction (extractor.py:249-272) -----------------------------
 
 

@@ -419,8 +419,8 @@ def test_minhash_lsh_probe_skips_signature_build(spark):
     # (the candidate subtree is checkpoint-truncated in the plan string,
     # so assert the build's absence plus the artifact actually existing)
     assert plan.count("partial_min") == 0
-    key = os.path.abspath(SF_DIR)
-    assert os.path.isdir(entry._MINHASH_SIG_CACHE[key])
+    key = ("minhash_signatures", os.path.abspath(SF_DIR))
+    assert os.path.isdir(entry._INDEX_STATE[key])
 
 
 def test_simhash_probe_skips_balance_aggregate(spark):

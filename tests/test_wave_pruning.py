@@ -15,6 +15,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.pipeline import (
+    _check_input_buckets,
+    bucket_col,
     place_wave,
     run_pipeline,
     write_bucketed_input,
@@ -63,6 +65,53 @@ def test_waves_prebucketed_matches_unpartitioned(spark, docs, tmp_path):
         for r in spark.read.parquet(out_b + "/extracted").collect()
     }
     assert a == b and len(a) == docs.count()
+
+
+def test_input_with_more_buckets_than_the_run_is_refused(spark, docs, tmp_path):
+    """An input written with 16 buckets, run with 8: the waves cover
+    buckets 0..7 only, so bucket=8..15 would never be read. The run must
+    refuse before its first wave instead of extracting half the corpus.
+    The check reads the bucket values the waves filter on, so the same
+    files re-bucketed in memory, or pruned to buckets 0..7, run."""
+    path = str(tmp_path / "bucketed16")
+    write_bucketed_input(docs, path, num_buckets=16)
+    p16 = spark.read.parquet(path)
+    out = str(tmp_path / "out16")
+    with pytest.raises(ValueError, match="num_buckets=8"):
+        run_pipeline(spark, p16, out, run_id="b", num_buckets=8, waves=1)
+    assert not os.path.exists(out)
+
+    # a bucket column that is not a partition column is checked too
+    with pytest.raises(ValueError, match="num_buckets=8"):
+        run_pipeline(spark, docs.withColumn("bucket", bucket_col(16)), out,
+                     run_id="b", num_buckets=8, waves=1)
+    assert not os.path.exists(out)
+
+    def extracted(frame, name):
+        o = str(tmp_path / name)
+        run_pipeline(spark, frame, o, run_id=name, num_buckets=8, waves=1)
+        return spark.read.parquet(o + "/extracted").count()
+
+    assert extracted(p16.withColumn("bucket", bucket_col(8)), "re8") == 200
+    low = p16.filter(F.col("bucket") < 8)
+    assert extracted(low, "low") == low.count()
+
+
+def test_bucket_check_reads_no_file_of_a_valid_partitioned_input(
+    spark, docs, tmp_path
+):
+    """On a bucket=N input the check's predicate is a partition filter:
+    a valid input prunes every file, so the check starts no Spark job."""
+    path = str(tmp_path / "bucketed8")
+    write_bucketed_input(docs, path, num_buckets=8)
+    pre = spark.read.parquet(path)
+    sc = spark.sparkContext
+    sc.setJobGroup("bucket_check", "bucket check")
+    try:
+        _check_input_buckets(pre, 8)
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("bucket_check")) == []
 
 
 def _wave_files(out_dir, table, wave_buckets):
