@@ -1690,19 +1690,7 @@ def _link_reciprocity(spark, sf_dir):
     pagerank_hosts uses (distinct directed edges, self-loops removed)."""
     from pdf_extractor_spark.operators.graph import reciprocity
 
-    docs = _t_wide(spark, sf_dir, "documents")
-
-    def tgt(a: int, b: int):
-        return F.concat(
-            F.lit("src"),
-            ((F.col("doc_id") * a + b) % 20).cast("string"),
-            F.lit(".example.com"),
-        )
-
-    edges = docs.select(
-        F.concat(F.col("source"), F.lit(".example.com")).alias("src"),
-        F.explode(F.array(tgt(3, 1), tgt(7, 2), tgt(11, 5))).alias("dst"),
-    )
+    edges = _host_graph_edges(_t_wide(spark, sf_dir, "documents"))
     return reciprocity(edges)
 
 
@@ -1711,44 +1699,15 @@ def _label_propagation(spark, sf_dir):
     the undirected closure of the deterministic host graph."""
     from pdf_extractor_spark.operators.graph import label_propagation
 
-    docs = _t_wide(spark, sf_dir, "documents")
-
-    def tgt(a: int, b: int):
-        return F.concat(
-            F.lit("src"),
-            ((F.col("doc_id") * a + b) % 20).cast("string"),
-            F.lit(".example.com"),
-        )
-
-    edges = docs.select(
-        F.concat(F.col("source"), F.lit(".example.com")).alias("src"),
-        F.explode(F.array(tgt(3, 1), tgt(7, 2), tgt(11, 5))).alias("dst"),
-    )
+    edges = _host_graph_edges(_t_wide(spark, sf_dir, "documents"))
     return label_propagation(edges)
 
 
-def _cc_hosts(spark, sf_dir):
-    """EXACT connected components (fixpoint, pointer-doubling — unlike
-    label_propagation's fixed 2 rounds) over a deterministic
-    chain-with-bridges host graph: nodes h(doc_id % 500), chain edges
-    u—u+1 broken at u % 17 == 16 (17-node path segments), bridge edges
-    u—u+13 where u % 29 == 3 (merges some segments into larger,
-    higher-diameter components). The oracle computes true components
-    via a recursive min-reachable-label CTE, so ONLY a genuinely
-    converged algorithm matches it. Runs the star-contraction variant
-    (O(log P) shuffles, not O(diameter) rounds); the bounded host
-    domain (<= 502 nodes) starts at one group, i.e. exactly one
-    vectorized union-find pass. `connected_components` (the iterative
-    pointer-doubling fixpoint) computes the identical partition —
-    pinned by tests/test_connected_components.py."""
-    from pdf_extractor_spark.operators.graph import (
-        connected_components_contract,
-    )
-
-    docs = _t_wide(spark, sf_dir, "documents")
-    # collapse the corpus to its distinct u values FIRST (<= 500 rows)
-    # so the chain/bridge construction and the undirected closure all
-    # run on the bounded table, not per-document
+def _cc_chain_bridge(docs):
+    """The chain and bridge edges of the cc_hosts / cc_incremental host
+    graph (see _cc_hosts). The corpus collapses to its distinct u values
+    FIRST (<= 500 rows), so the edge construction and the undirected
+    closure run on the bounded table, not per document."""
     us = docs.select((F.col("doc_id") % 500).alias("u")).distinct()
     u = F.col("u")
 
@@ -1763,6 +1722,28 @@ def _cc_hosts(spark, sf_dir):
     bridge = us.filter(u % 29 == 3).select(
         h(u).alias("src"), h(u + 13).alias("dst")
     )
+    return chain, bridge
+
+
+def _cc_hosts(spark, sf_dir):
+    """EXACT connected components by star contraction (converged in
+    O(log P) shuffles, not O(diameter) rounds — unlike
+    label_propagation's fixed 2 rounds) over a deterministic
+    chain-with-bridges host graph: nodes h(doc_id % 500), chain edges
+    u—u+1 broken at u % 17 == 16 (17-node path segments), bridge edges
+    u—u+13 where u % 29 == 3 (merges some segments into larger,
+    higher-diameter components). The oracle computes true components
+    via a recursive min-reachable-label CTE, so ONLY a genuinely
+    converged algorithm matches it. The bounded host domain (<= 502
+    nodes) starts at one group, i.e. exactly one vectorized union-find
+    pass. `connected_components` (the iterative
+    pointer-doubling fixpoint) computes the identical partition —
+    pinned by tests/test_connected_components.py."""
+    from pdf_extractor_spark.operators.graph import (
+        connected_components_contract,
+    )
+
+    chain, bridge = _cc_chain_bridge(_t_wide(spark, sf_dir, "documents"))
     # the node domain is bounded by construction (<= 502 hosts), so the
     # contraction starts — and ends — at a single group
     return connected_components_contract(
@@ -1784,21 +1765,7 @@ def _cc_incremental(spark, sf_dir):
         connected_components_incremental,
     )
 
-    docs = _t_wide(spark, sf_dir, "documents")
-    us = docs.select((F.col("doc_id") % 500).alias("u")).distinct()
-    u = F.col("u")
-
-    def h(e):
-        return F.concat(
-            F.lit("h"), e.cast("string"), F.lit(".example.com")
-        )
-
-    chain = us.filter(u % 17 != 16).select(
-        h(u).alias("src"), h(u + 1).alias("dst")
-    )
-    bridge = us.filter(u % 29 == 3).select(
-        h(u).alias("src"), h(u + 13).alias("dst")
-    )
+    chain, bridge = _cc_chain_bridge(_t_wide(spark, sf_dir, "documents"))
     base = _persisted(
         spark, "cc_base_labels", sf_dir,
         lambda: connected_components_contract(chain, n_groups=1).select(
@@ -2177,19 +2144,7 @@ def _pagerank_hosts(spark, sf_dir):
     crawl curation; oracle = the same 3 iterations unrolled in SQL."""
     from pdf_extractor_spark.operators.graph import pagerank
 
-    docs = _t_wide(spark, sf_dir, "documents")
-
-    def tgt(a: int, b: int):
-        return F.concat(
-            F.lit("src"),
-            ((F.col("doc_id") * a + b) % 20).cast("string"),
-            F.lit(".example.com"),
-        )
-
-    edges = docs.select(
-        F.concat(F.col("source"), F.lit(".example.com")).alias("src"),
-        F.explode(F.array(tgt(3, 1), tgt(7, 2), tgt(11, 5))).alias("dst"),
-    )
+    edges = _host_graph_edges(_t_wide(spark, sf_dir, "documents"))
     out = pagerank(edges, iters=3, damping=0.85)
     return out.select(F.col("node").alias("host"), "rank")
 
@@ -2199,19 +2154,9 @@ def _crawl_frontier(spark, sf_dir):
     graph as pagerank_hosts — min-hop label per reached node."""
     from pdf_extractor_spark.operators.graph import khop_reachable
 
-    docs = _t_wide(spark, sf_dir, "documents")
-
-    def tgt(a: int, b: int):
-        return F.concat(
-            F.lit("src"),
-            ((F.col("doc_id") * a + b) % 20).cast("string"),
-            F.lit(".example.com"),
-        )
-
-    edges = docs.select(
-        F.concat(F.col("source"), F.lit(".example.com")).alias("src"),
-        F.explode(F.array(tgt(3, 1), tgt(7, 2), tgt(11, 5))).alias("dst"),
-    ).where(F.col("src") != F.col("dst"))
+    edges = _host_graph_edges(_t_wide(spark, sf_dir, "documents")).where(
+        F.col("src") != F.col("dst")
+    )
     seeds = values_df(
         spark,
         [("src0.example.com",), ("src1.example.com",)],
@@ -2226,19 +2171,7 @@ def _triangle_hosts(spark, sf_dir):
     tight-community density signal of crawl curation."""
     from pdf_extractor_spark.operators.graph import triangle_count
 
-    docs = _t_wide(spark, sf_dir, "documents")
-
-    def tgt(a: int, b: int):
-        return F.concat(
-            F.lit("src"),
-            ((F.col("doc_id") * a + b) % 20).cast("string"),
-            F.lit(".example.com"),
-        )
-
-    edges = docs.select(
-        F.concat(F.col("source"), F.lit(".example.com")).alias("src"),
-        F.explode(F.array(tgt(3, 1), tgt(7, 2), tgt(11, 5))).alias("dst"),
-    )
+    edges = _host_graph_edges(_t_wide(spark, sf_dir, "documents"))
     out = triangle_count(edges)
     return out.select(F.col("node").alias("host"), "degree", "triangles")
 
@@ -4864,7 +4797,8 @@ def _ewma_daily(spark, sf_dir):
 
 def _host_graph_edges(docs):
     """The deterministic synthetic host link graph shared by the
-    pagerank_hosts / crawl_frontier / triangle_hosts family."""
+    pagerank_hosts / crawl_frontier / triangle_hosts / link_reciprocity /
+    label_propagation family."""
 
     def tgt(a: int, b: int):
         return F.concat(
@@ -11735,9 +11669,10 @@ SELECT bucket,
   CAST(count(*) AS BIGINT) AS n
 FROM b GROUP BY bucket
 """
-    # link_reciprocity: same 3-edge host synthesis as pagerank_hosts;
-    # left join against the reversed distinct edge set.
-    sql["link_reciprocity"] = """
+    # shared host-graph CTE prefixes (the _host_graph_edges synthesis):
+    # _g_e0 is the directed 3-edge table, _g_cte adds its undirected
+    # closure without self-loops
+    _g_e0 = """
 WITH e0 AS (
   SELECT source || '.example.com' AS src,
          'src' || CAST((doc_id * 3 + 1) % 20 AS VARCHAR)
@@ -11749,7 +11684,15 @@ WITH e0 AS (
   UNION ALL
   SELECT source || '.example.com',
          'src' || CAST((doc_id * 11 + 5) % 20 AS VARCHAR)
-           || '.example.com' FROM documents),
+           || '.example.com' FROM documents)"""
+    _g_cte = f"""{_g_e0},
+und AS (
+  SELECT DISTINCT src, dst FROM (
+    SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0)
+  WHERE src <> dst)"""
+    # link_reciprocity: same 3-edge host synthesis as pagerank_hosts;
+    # left join against the reversed distinct edge set.
+    sql["link_reciprocity"] = f"""{_g_e0},
 e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst)
 SELECT a.src, CAST(count(*) AS BIGINT) AS out_deg,
   CAST(sum(CASE WHEN b.src IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -11759,23 +11702,7 @@ GROUP BY a.src
 """
     # label_propagation: same undirected closure, two unrolled
     # min-propagation rounds.
-    sql["label_propagation"] = """
-WITH e0 AS (
-  SELECT source || '.example.com' AS src,
-         'src' || CAST((doc_id * 3 + 1) % 20 AS VARCHAR)
-           || '.example.com' AS dst FROM documents
-  UNION ALL
-  SELECT source || '.example.com',
-         'src' || CAST((doc_id * 7 + 2) % 20 AS VARCHAR)
-           || '.example.com' FROM documents
-  UNION ALL
-  SELECT source || '.example.com',
-         'src' || CAST((doc_id * 11 + 5) % 20 AS VARCHAR)
-           || '.example.com' FROM documents),
-und AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0)
-  WHERE src <> dst),
+    sql["label_propagation"] = f"""{_g_cte},
 l0 AS (SELECT DISTINCT src AS node, src AS label FROM und),
 l1 AS (
   SELECT l.node,
@@ -13649,25 +13576,6 @@ FROM p
 """
     # extract_pipeline: rows-only driver check (pandas-UDF pipeline;
     # span-level parity is covered by tests/test_pipeline_spark.py).
-    # shared host-graph CTE prefix for the round-5 graph additions —
-    # identical to the pagerank_hosts / label_propagation edge synthesis
-    _g_cte = """
-WITH e0 AS (
-  SELECT source || '.example.com' AS src,
-         'src' || CAST((doc_id * 3 + 1) % 20 AS VARCHAR)
-           || '.example.com' AS dst FROM documents
-  UNION ALL
-  SELECT source || '.example.com',
-         'src' || CAST((doc_id * 7 + 2) % 20 AS VARCHAR)
-           || '.example.com' FROM documents
-  UNION ALL
-  SELECT source || '.example.com',
-         'src' || CAST((doc_id * 11 + 5) % 20 AS VARCHAR)
-           || '.example.com' FROM documents),
-und AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0)
-  WHERE src <> dst)"""
 
     sql["adamic_adar"] = f"""{_g_cte},
 deg AS (SELECT src AS w, count(*) AS deg FROM und GROUP BY 1),

@@ -18,7 +18,8 @@ explode + one bounded groupBy, fully distributed, deterministic.
 
 Writes under --output:
     hash_lr_weights/  (bucket, n_pos, n_neg, weight) — dense model;
-                      mlhook.HashLRModel.load consumes it, and
+                      mlhook.HashLRModel.load reads it for
+                      extract_documents(model=...), and
                       hash_lr_score(weights=...) applies it columnar
     manifest.json     {buckets, label, keyword, n_docs, n_pos_docs,
                       train_accuracy} for audit/promotion gates

@@ -1,85 +1,14 @@
-"""Classification operators (reference document_classifier.py, SURVEY.md §2.4).
+"""Classification-audit operators (reference document_classifier.py,
+SURVEY.md §2.4).
 
-Rule scoring is parity-critical Python-`re` territory (`\\b` around
-non-ASCII, IGNORECASE unicode case folding), so it runs as ONE Arrow-batched
-pandas UDF per document text, compiled patterns cached per worker
-(module-level lru_cache in the oracle). The fusion cascade and the ML hook
-are columnar when/otherwise.
-
-The patterns dim is tiny (a handful of doc types) — it travels in the UDF
-closure, the broadcast-join analogue of the docs x patterns product
-(SURVEY.md §2.8 "the one real join surface").
+The per-document classification itself — rule scoring, the optional ML
+model and the fusion cascade — runs inside the pipeline's one fused UDF
+(operators/validate.classify_extract_validate_udf) via the oracle
+functions. This module holds the columnar statistics over labels that
+classifiers and filters produce.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ..config import DocTypePattern
-
-_RULE_RESULT = T.StructType(
-    [
-        T.StructField("rule_type", T.StringType(), True),
-        T.StructField("rule_score", T.DoubleType(), False),
-    ]
-)
-
-
-def classify_by_rules_udf(patterns: dict[str, DocTypePattern]):
-    from pyspark.sql.functions import pandas_udf
-
-    all_kws = tuple(sorted({kw for p in patterns.values() for kw in p.keywords}))
-
-    @pandas_udf(_RULE_RESULT)
-    def _classify(texts):
-        import pandas as pd
-
-        from ..oracle.classifier import (
-            classify_by_rules,
-            keyword_presence_batch,
-        )
-
-        presence = keyword_presence_batch(texts, all_kws)
-        types, scores = [], []
-        for text, present in zip(texts, presence):
-            t, s = classify_by_rules(text, patterns, present=present)
-            types.append(t)
-            scores.append(s)
-        return pd.DataFrame({"rule_type": types, "rule_score": scores})
-
-    return _classify
-
-
-def fuse_columns(
-    rule_type: Column,
-    rule_score: Column,
-    ml_type: Column | None = None,
-    ml_score: Column | None = None,
-) -> Column:
-    """Fusion cascade (document_classifier.py:157-173) as a when/otherwise
-    chain -> struct(doc_type, confidence)."""
-    ml_type = ml_type if ml_type is not None else F.lit(None).cast("string")
-    ml_score = ml_score if ml_score is not None else F.lit(0.0)
-
-    pick = lambda t, s: F.struct(  # noqa: E731
-        t.alias("doc_type"), s.cast("double").alias("confidence")
-    )
-    none = pick(F.lit(None).cast("string"), F.lit(0.0))
-    return (
-        F.when(ml_score > 0.7, pick(ml_type, ml_score))
-        .when(rule_score > 0.6, pick(rule_type, rule_score))
-        .when(
-            (ml_score > 0) & (rule_score > 0),
-            F.when(ml_score > rule_score, pick(ml_type, ml_score)).otherwise(
-                pick(rule_type, rule_score)
-            ),
-        )
-        .when(ml_score > 0, pick(ml_type, ml_score))
-        .when(rule_score > 0, pick(rule_type, rule_score))
-        .otherwise(none)
-    )
 
 
 def cohens_kappa(

@@ -5,10 +5,11 @@ The reference loads a pickled sklearn (TF-IDF vectorizer + RandomForest)
 pair if present and returns (None, 0.0) when absent — the model file does
 not ship in the repo, so this is an OPTIONAL hook there and here.
 
-Spark-first shape: the pickled model rides a broadcast variable (one
-deserialization per executor, not per task), scoring happens in an
-Arrow-batched pandas UDF, and the fusion cascade stays columnar
-(operators/classify.fuse_columns already accepts the ml columns).
+Spark-first shape: the model is the `model` argument of
+pipeline.extract_documents. It travels in the closure of the fused
+classify -> extract -> validate UDF, scores each Arrow batch with one
+call (oracle.classifier.classify_by_ml), and its decision enters the
+fusion cascade ahead of template extraction and validation.
 
 Model contract (duck-typed so sklearn pipelines drop in unchanged when the
 runtime has sklearn): `predict(list[str]) -> labels` and either
@@ -17,16 +18,7 @@ runtime has sklearn): `predict(list[str]) -> labels` and either
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-_ML_RESULT = T.StructType(
-    [
-        T.StructField("ml_type", T.StringType(), True),
-        T.StructField("ml_score", T.DoubleType(), False),
-    ]
-)
+from pyspark.sql import SparkSession
 
 
 class KeywordStubModel:
@@ -117,75 +109,3 @@ class HashLRModel:
         for r in rows:
             weights[r["bucket"]] = r["weight"]
         return cls(weights, label, threshold=threshold, **kw)
-
-
-def classify_by_ml_udf(spark: SparkSession, model):
-    """Returns a pandas UDF text -> struct(ml_type, ml_score). `model` is
-    broadcast once; None model (reference: no model file) scores every row
-    (None, 0.0)."""
-    from pyspark.sql.functions import pandas_udf
-
-    bc = spark.sparkContext.broadcast(model)
-
-    @pandas_udf(_ML_RESULT)
-    def _ml(texts):
-        import pandas as pd
-
-        m = bc.value
-        if m is None:
-            return pd.DataFrame(
-                {"ml_type": [None] * len(texts), "ml_score": [0.0] * len(texts)}
-            )
-        vals = ["" if t is None else t for t in texts]
-        labels = list(m.predict(vals))
-        if hasattr(m, "predict_proba"):
-            import numpy as np
-
-            proba = np.asarray(m.predict_proba(vals))
-            scores = proba.max(axis=1).astype(float).tolist()
-        else:
-            scores = [1.0] * len(labels)
-        # reference returns (None, 0.0) for empty text (classify_document
-        # guards on falsy text, document_classifier.py:146-148)
-        out_t, out_s = [], []
-        for t, lbl, s in zip(texts, labels, scores):
-            if t is None or not str(t).strip():
-                out_t.append(None)
-                out_s.append(0.0)
-            else:
-                out_t.append(str(lbl))
-                out_s.append(float(s))
-        return pd.DataFrame({"ml_type": out_t, "ml_score": out_s})
-
-    return _ml
-
-
-def classify_documents_with_ml(
-    df: DataFrame,
-    spark: SparkSession,
-    patterns,
-    model,
-    text_col: str = "all_text",
-) -> DataFrame:
-    """Rules + ML + fusion cascade (document_classifier.py:138-173): rule
-    scoring in its pandas UDF, ML scoring in this hook's UDF, cascade as
-    columnar when/otherwise."""
-    from .classify import classify_by_rules_udf, fuse_columns
-
-    rules = classify_by_rules_udf(patterns)
-    ml = classify_by_ml_udf(spark, model)
-    out = df.withColumn("_rule", rules(F.col(text_col))).withColumn(
-        "_ml", ml(F.col(text_col))
-    )
-    fused = fuse_columns(
-        F.col("_rule.rule_type"),
-        F.col("_rule.rule_score"),
-        F.col("_ml.ml_type"),
-        F.col("_ml.ml_score"),
-    )
-    return (
-        out.withColumn("_f", fused)
-        .withColumn("doc_type", F.col("_f.doc_type"))
-        .withColumn("confidence", F.col("_f.confidence"))
-        .drop("_rule", "_ml", "_f")
-    )

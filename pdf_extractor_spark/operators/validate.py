@@ -3,10 +3,11 @@
 Two implementations, used for different surfaces:
 
 1. `classify_extract_validate_udf` — the PIPELINE stage: ONE Arrow-batched
-   pandas UDF that runs rule classification, template field extraction AND
-   schema validation per document via the oracle (exact Python-`re`/strptime
-   parity, typed values flow directly from extraction into validation like
-   in the reference). One Python crossing per batch. Each batch ends by
+   pandas UDF that runs rule classification, the optional ML model, the
+   fusion cascade, template field extraction AND schema validation per
+   document via the oracle (exact Python-`re`/strptime parity, typed values
+   flow directly from extraction into validation like in the reference).
+   One Python crossing per batch. Each batch ends by
    dropping the worker's cached zip finders (`session.drop_zip_finders`),
    so the next task start does not re-read Spark's zips.
 
@@ -48,10 +49,18 @@ def classify_extract_validate_udf(
     patterns: dict[str, DocTypePattern],
     templates: dict[str, dict],
     schemas: dict[str, ValidationSchema],
+    model=None,
 ):
     """all_text -> struct(doc_type, confidence, fields, validation): rule
-    classification + fusion cascade + template field extraction + schema
-    validation, fused into ONE Arrow-batched pandas UDF.
+    classification + optional ML model + fusion cascade + template field
+    extraction + schema validation, fused into ONE Arrow-batched pandas
+    UDF. The model (operators/mlhook.py, or any object with the duck-typed
+    `predict` / `predict_proba` contract of oracle.classify_by_ml) scores
+    each batch with one call; if that call raises, each document is
+    scored on its own, so only the document that poisons the model becomes
+    a failure row. Its decision feeds the template and validation steps,
+    as in the reference (document_classifier.py:138-173). With no model
+    the fusion sees (None, 0.0), i.e. rules only.
 
     One Python worker per task and one Arrow crossing of all_text, instead
     of the classify-then-validate chain's two workers and two crossings —
@@ -74,6 +83,7 @@ def classify_extract_validate_udf(
         import pandas as pd
 
         from ..oracle.classifier import (
+            classify_by_ml,
             classify_by_rules,
             fuse_classification,
             keyword_presence_batch,
@@ -87,10 +97,18 @@ def classify_extract_validate_udf(
         # keyword (exactness argument in keyword_presence_batch) — the
         # per-doc Python union scan was the kernel's dominant cost
         presence = keyword_presence_batch(all_text, all_kws)
+        # ML scores for the whole batch in one model call; None marks a
+        # document to score on its own (the batch call raised)
+        ml = [(None, 0.0)] * len(all_text)
+        if model is not None:
+            try:
+                ml = classify_by_ml(all_text, model)
+            except Exception:  # noqa: BLE001 — per-doc retry below
+                ml = [None] * len(all_text)
 
         out = []
         pending: dict[str, list] = {}  # schema name -> [(row idx, fields, validation)]
-        for text, present in zip(all_text, presence):
+        for text, present, scored in zip(all_text, presence, ml):
             # failure-row semantics (batch_processor.py:81-83): ANY per-doc
             # exception becomes a success=false record downstream — a
             # poisoned document must never kill the 10^12-doc job
@@ -98,8 +116,9 @@ def classify_extract_validate_udf(
                 rule_type, rule_score = classify_by_rules(
                     text, patterns, present=present
                 )
+                ml_type, ml_score = scored or classify_by_ml([text], model)[0]
                 doc_type, confidence = fuse_classification(
-                    rule_type, rule_score, None, 0.0
+                    rule_type, rule_score, ml_type, ml_score
                 )
                 tpl = templates.get(doc_type) if doc_type is not None else None
                 if (

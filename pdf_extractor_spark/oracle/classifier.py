@@ -6,6 +6,9 @@ classify_by_rules: document_classifier.py:84-115 —
   score/max_score; strictly-greater argmax across types (ties -> first in
   iteration order); (None, 0.0) when text empty or nothing scores.
 
+classify_by_ml: document_classifier.py:117-136 — the optional model's
+  label and top class probability, scored for a whole batch at once.
+
 fuse_classification: document_classifier.py:157-173 —
   ml>0.7 -> ml; rule>0.6 -> rule; both>0 -> max (ties -> rule); single>0 ->
   it; else (None, 0.0).
@@ -266,6 +269,28 @@ def classify_by_rules(
                 best_score = normalized
                 best_match = doc_type
     return best_match, best_score
+
+
+def classify_by_ml(texts, model) -> list[tuple[str | None, float]]:
+    """(ml_type, ml_score) per text from ONE `predict` and ONE
+    `predict_proba` call over the batch. Model contract (duck-typed, so a
+    sklearn pipeline drops in unchanged): `predict(list[str]) -> labels`
+    and optionally `predict_proba(list[str]) -> row-wise probabilities`;
+    without it every label scores 1.0. Falsy or whitespace-only text
+    gives (None, 0.0), as the reference's falsy-text guard does
+    (document_classifier.py:146-148)."""
+    vals = ["" if t is None else t for t in texts]
+    labels = list(model.predict(vals))
+    if hasattr(model, "predict_proba"):
+        scores = [float(max(p)) for p in model.predict_proba(vals)]
+    else:
+        scores = [1.0] * len(labels)
+    if len(labels) != len(vals) or len(scores) != len(vals):
+        raise ValueError(f"model scored {len(labels)} of {len(vals)} texts")
+    return [
+        (None, 0.0) if t is None or not str(t).strip() else (str(lbl), s)
+        for t, lbl, s in zip(texts, labels, scores)
+    ]
 
 
 def fuse_classification(

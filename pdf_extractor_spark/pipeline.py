@@ -42,12 +42,14 @@ OUTPUT_COLUMNS = [
 
 
 def extract_documents(
-    df: DataFrame, patterns=None, templates=None, schemas=None
+    df: DataFrame, patterns=None, templates=None, schemas=None, model=None
 ) -> DataFrame:
     """documents(doc_id, spans) -> extracted (SURVEY.md §1.4 output schema).
     Pure transformation — no partitioning/sink concerns (see run_pipeline).
     The config arguments default to the packaged config (config.load_*);
-    its frozen dataclasses travel in the UDF closure as they are."""
+    its frozen dataclasses travel in the UDF closure as they are. `model`
+    is the optional ML classifier (operators/mlhook.py); None classifies
+    by rules only, as the reference does without a model file."""
     patterns = patterns or load_patterns()
     templates = templates or load_templates()
     schemas = schemas if schemas is not None else load_schemas()
@@ -58,7 +60,7 @@ def extract_documents(
     # pandas UDF: one Python worker per task, one Arrow crossing of
     # all_text (see classify_extract_validate_udf docstring; language
     # detection and span normalization stay fully columnar upstream)
-    cev = classify_extract_validate_udf(patterns, templates, schemas)
+    cev = classify_extract_validate_udf(patterns, templates, schemas, model)
     fused = set(cev.returnType.fieldNames())
     return out.withColumn("_r", cev(F.col("all_text"))).select(
         *(f"_r.{c}" if c in fused else c for c in OUTPUT_COLUMNS)

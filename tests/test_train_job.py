@@ -36,10 +36,7 @@ def test_run_train_job_and_ml_hook(spark, tmp_path):
     assert manifest["train_accuracy"] > 0.95
 
     # artifact loads into the duck-typed hook model
-    from pdf_extractor_spark.operators.mlhook import (
-        HashLRModel,
-        classify_documents_with_ml,
-    )
+    from pdf_extractor_spark.operators.mlhook import HashLRModel
 
     model = HashLRModel.load(
         spark, os.path.join(out, "hash_lr_weights"), label="sparky",
@@ -65,11 +62,17 @@ def test_run_train_job_and_ml_hook(spark, tmp_path):
     # fusion cascade end-to-end with the trained model: ml scores above
     # the 0.7 gate must surface ml_type as doc_type
     from pdf_extractor_spark.config import DocTypePattern
+    from pdf_extractor_spark.operators.validate import (
+        classify_extract_validate_udf,
+    )
 
     pats = {"sqlish": DocTypePattern("sqlish", ("join",), ())}
     df = spark.createDataFrame(
         [(d, t) for d, t in sample], "doc_id string, all_text string"
     )
-    fused = classify_documents_with_ml(df, spark, pats, model)
+    cev = classify_extract_validate_udf(pats, {}, {}, model)
+    fused = df.select("doc_id", cev(F.col("all_text")).alias("_r")).select(
+        "doc_id", "_r.doc_type", "_r.confidence"
+    )
     got = {r["doc_id"]: r for r in fused.collect()}
     assert any(r["doc_type"] == "sparky" for r in got.values())
