@@ -91,12 +91,6 @@ def load_patterns(patterns_dir: str | None = None) -> dict[str, DocTypePattern]:
     return out
 
 
-_ALLOWED_FIELD_TYPES = {
-    "string", "number", "decimal", "integer", "date",
-    "boolean", "email", "cpf", "cnpj", "enum",
-}
-
-
 def load_schemas(schema_dir: str | None = None) -> dict[str, ValidationSchema]:
     schema_dir = schema_dir or os.path.join(_CONF_DIR, "schemas")
     out: dict[str, ValidationSchema] = {}

@@ -3,13 +3,16 @@
 Two implementations, used for different surfaces:
 
 1. `classify_extract_validate_udf` — the PIPELINE stage: ONE Arrow-batched
-   pandas UDF that runs rule classification, the optional ML model, the
-   fusion cascade, template field extraction AND schema validation per
-   document via the oracle (exact Python-`re`/strptime parity, typed values
+   pandas UDF, a batch shell around the oracle's per-document function
+   `oracle.extract.classify_extract_validate` (rule classification, the
+   optional ML model, the fusion cascade, template field extraction AND
+   schema validation; exact Python-`re`/strptime parity, typed values
    flow directly from extraction into validation like in the reference).
-   One Python crossing per batch. Each batch ends by
-   dropping the worker's cached zip finders (`session.drop_zip_finders`),
-   so the next task start does not re-read Spark's zips.
+   The shell batches what is cheaper per batch: keyword presence, model
+   scoring and the custom-SQL validations. One Python crossing per batch.
+   Each batch ends by dropping the worker's cached zip finders
+   (`session.drop_zip_finders`), so the next task start does not re-read
+   Spark's zips.
 
 2. `field_error_col` / `cpf_valid_col` / `cnpj_valid_col` — fully COLUMNAR
    field validators (whole-stage codegen, no Python) compiled from the same
@@ -24,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import DocTypePattern, FieldSchema, ValidationSchema
-from ..oracle.extract import AUTO_TEMPLATE_MIN_CONFIDENCE
+from ..oracle.extract import AUTO_TEMPLATE_MIN_CONFIDENCE  # noqa: F401 — re-exported
 
 VALIDATION_TYPE = T.StructType(
     [
@@ -51,25 +54,23 @@ def classify_extract_validate_udf(
     schemas: dict[str, ValidationSchema],
     model=None,
 ):
-    """all_text -> struct(doc_type, confidence, fields, validation): rule
-    classification + optional ML model + fusion cascade + template field
-    extraction + schema validation, fused into ONE Arrow-batched pandas
-    UDF. The model (operators/mlhook.py, or any object with the duck-typed
-    `predict` / `predict_proba` contract of oracle.classify_by_ml) scores
-    each batch with one call; if that call raises, each document is
-    scored on its own, so only the document that poisons the model becomes
-    a failure row. Its decision feeds the template and validation steps,
-    as in the reference (document_classifier.py:138-173). With no model
-    the fusion sees (None, 0.0), i.e. rules only.
+    """all_text -> struct(doc_type, confidence, fields, validation, error):
+    ONE Arrow-batched pandas UDF that runs the oracle's per-document
+    decision, oracle.extract.classify_extract_validate, on every row, so
+    Spark output == oracle output by construction. The UDF holds only
+    batch concerns: one keyword-presence pass; one model call (any object
+    with the `predict` / `predict_proba` contract of
+    oracle.classify_by_ml; None = rules only), retried per document if it
+    raises; failure rows, so a document that raises (or poisons the
+    model) gets `error` set (batch_processor.py:81-83); custom validations
+    once per schema (validator.apply_custom_validations); the zip-finder
+    drop; the result frame.
 
     One Python worker per task and one Arrow crossing of all_text, instead
-    of the classify-then-validate chain's two workers and two crossings —
-    at N cores the unfused chain runs 2N+ Python processes, which
+    of a classify-then-validate chain's two workers and two crossings — at
+    N cores an unfused chain runs 2N+ Python processes, which
     oversubscribes executors and caps scaling (measured: negative scaling
-    at local[16] on a 32-core host). All parity-critical Python-`re` work
-    (document_classifier.py:84-115 scoring, extractor.py:252-272 template
-    regexes, validator.py:41-324) happens in this single stage via the
-    oracle functions, so Spark output == oracle output by construction.
+    at local[16] on a 32-core host).
 
     The config arrives as the loaded frozen dataclasses (config.load_*),
     which pickle as they are; the sorted keyword tuple is derived here,
@@ -82,15 +83,9 @@ def classify_extract_validate_udf(
     def _run(all_text):
         import pandas as pd
 
-        from ..oracle.classifier import (
-            classify_by_ml,
-            classify_by_rules,
-            fuse_classification,
-            keyword_presence_batch,
-        )
-        from ..oracle.extract import _field_to_string
-        from ..oracle.template import extract_template_fields
-        from ..oracle.validator import validate_data
+        from ..oracle.classifier import classify_by_ml, keyword_presence_batch
+        from ..oracle.extract import _field_to_string, classify_extract_validate
+        from ..oracle.validator import apply_custom_validations
         from ..session import drop_zip_finders
 
         # keyword presence for the whole Arrow batch in one C++ pass per
@@ -107,53 +102,26 @@ def classify_extract_validate_udf(
                 ml = [None] * len(all_text)
 
         out = []
-        pending: dict[str, list] = {}  # schema name -> [(row idx, fields, validation)]
+        # schema name -> (schema, typed fields, validation) of its rows,
+        # whose custom validations run once per batch below (a per-doc
+        # DuckDB query costs ~1.4 ms — it would dominate the pipeline)
+        pending: dict[str, tuple] = {}
         for text, present, scored in zip(all_text, presence, ml):
-            # failure-row semantics (batch_processor.py:81-83): ANY per-doc
-            # exception becomes a success=false record downstream — a
-            # poisoned document must never kill the 10^12-doc job
+            # a poisoned document must never kill the 10^12-doc job
             try:
-                rule_type, rule_score = classify_by_rules(
-                    text, patterns, present=present
-                )
-                ml_type, ml_score = scored or classify_by_ml([text], model)[0]
-                doc_type, confidence = fuse_classification(
-                    rule_type, rule_score, ml_type, ml_score
-                )
-                tpl = templates.get(doc_type) if doc_type is not None else None
-                if (
-                    tpl is None
-                    or text is None
-                    or confidence <= AUTO_TEMPLATE_MIN_CONFIDENCE
-                ):
-                    out.append(
-                        {
-                            "doc_type": doc_type,
-                            "confidence": confidence,
-                            "fields": {},
-                            "validation": None,
-                            "error": None,
-                        }
+                doc_type, confidence, fields, validation, schema = (
+                    classify_extract_validate(
+                        text, patterns, templates, schemas, present=present,
+                        ml=scored or classify_by_ml([text], model)[0],
+                        apply_custom=False,
                     )
-                    continue
-                fields = extract_template_fields(text, tpl)
-                schema = schemas.get(f"{doc_type}_schema")
-                validation = None
-                if schema is not None:
-                    # field-level checks per doc (cheap); custom SQL
-                    # conditions deferred to ONE vectorized evaluation per
-                    # batch below (a per-doc DuckDB query costs ~1.4 ms —
-                    # it would dominate the whole pipeline)
-                    v = validate_data(fields, schema, apply_custom=False)
-                    validation = {
-                        "valid": v["valid"],
-                        "errors": v["errors"],
-                        "warnings": v["warnings"],
-                    }
-                    if schema.custom_validations:
-                        pending.setdefault(schema.name, []).append(
-                            (len(out), fields, validation)
-                        )
+                )
+                if schema is not None and schema.custom_validations:
+                    _s, rows, results = pending.setdefault(
+                        schema.name, (schema, [], [])
+                    )
+                    rows.append(fields)
+                    results.append(validation)
                 out.append(
                     {
                         "doc_type": doc_type,
@@ -174,36 +142,8 @@ def classify_extract_validate_udf(
                     }
                 )
 
-        # vectorized custom validations: one DuckDB query per (schema,
-        # condition) per batch; if the batch form fails, each row runs as
-        # a one-row batch, which keeps the reference's row-level
-        # exception->warning semantics
-        from ..oracle.validator import (
-            apply_custom_outcome,
-            eval_condition_sql_batch,
-        )
-
-        for sname, entries in pending.items():
-            schema = schemas[sname]
-            fields_list = [f for _i, f, _v in entries]
-            for cv in schema.custom_validations:
-                try:
-                    oks = eval_condition_sql_batch(
-                        cv["condition_sql"], fields_list, schema
-                    )
-                    for (_i, _f, validation), ok in zip(entries, oks):
-                        apply_custom_outcome(validation, cv, ok)
-                except Exception:
-                    for _i, f, validation in entries:
-                        try:
-                            ok = eval_condition_sql_batch(
-                                cv["condition_sql"], [f], schema
-                            )[0]
-                            apply_custom_outcome(validation, cv, ok)
-                        except Exception as e:
-                            apply_custom_outcome(
-                                validation, cv, True, error=str(e)
-                            )
+        for schema, rows, results in pending.values():
+            apply_custom_validations(schema, rows, results)
         drop_zip_finders()
         return pd.DataFrame(out)
 

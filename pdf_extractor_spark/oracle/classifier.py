@@ -187,19 +187,12 @@ def keyword_presence_batch(
     per danger char) fall back to the full exact scan; for every other
     row an Arrow miss PROVES a Python-re miss. The per-char superset
     property net of the computed danger set is pinned exhaustively over
-    every BMP codepoint by tests/test_parity_regex.py.
-    Falls back to the pure-Python scan when pyarrow is unavailable."""
+    every BMP codepoint by tests/test_parity_regex.py."""
     if not kws:
         return [frozenset() for _ in texts]
-    try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-    except ImportError:  # pragma: no cover — pyarrow ships with Spark
-        return [
-            _keyword_presence(t, kws) if isinstance(t, str) and t
-            else frozenset()
-            for t in texts
-        ]
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     clean = [t if isinstance(t, str) else None for t in texts]
     arr = pa.array(clean, type=pa.string())
     false = pa.scalar(False)

@@ -14,10 +14,13 @@ Reference flow being modeled (SURVEY.md §3.2):
     image/table spans pass through with media_ref intact.
   * classification text = normalized text spans joined with "\n"
     (document_classifier.py:61-82 re-expressed over spans, SURVEY.md §2.4).
-  * rule classification + fusion (no ML model by default).
-  * template auto-select when confidence > 0.5 (batch_processor.py:42);
-    template fields extracted from the joined text; validation against the
-    doc-type schema.
+  * classification, template fields and validation of that text by
+    `classify_extract_validate`, the one per-document decision, which the
+    Spark UDF (operators/validate.py) runs per row too: rule
+    classification fused with the optional ML model's score (rules only
+    by default); template auto-select when confidence > 0.5
+    (batch_processor.py:42); template fields extracted from the joined
+    text; validation against the doc-type schema.
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ from __future__ import annotations
 from datetime import datetime
 
 from ..config import DocTypePattern, ValidationSchema
-from .classifier import classify_by_rules, fuse_classification
+from .classifier import classify_by_ml, classify_by_rules, fuse_classification
 from .language import detect_language, get_language_name, preprocess_for_language
 from .template import extract_template_fields
 from .validator import validate_data
@@ -39,6 +42,7 @@ def extract_document(
     patterns: dict[str, DocTypePattern],
     templates: dict[str, dict] | None = None,
     schemas: dict[str, ValidationSchema] | None = None,
+    model=None,
 ) -> dict:
     templates = templates or {}
     schemas = schemas or {}
@@ -76,20 +80,10 @@ def extract_document(
         s["text"] or "" for s in out_spans if s["kind"] == "text"
     )
 
-    rule_type, rule_score = classify_by_rules(all_text, patterns)
-    doc_type, confidence = fuse_classification(rule_type, rule_score)
-
-    fields: dict = {}
-    validation = None
-    if (
-        doc_type
-        and confidence > AUTO_TEMPLATE_MIN_CONFIDENCE
-        and doc_type in templates
-    ):
-        fields = extract_template_fields(all_text, templates[doc_type])
-        schema = schemas.get(f"{doc_type}_schema")
-        if schema is not None:
-            validation = validate_data(fields, schema)
+    ml = (None, 0.0) if model is None else classify_by_ml([all_text], model)[0]
+    doc_type, confidence, fields, validation, _schema = (
+        classify_extract_validate(all_text, patterns, templates, schemas, ml=ml)
+    )
 
     return {
         "doc_id": doc_id,
@@ -107,6 +101,40 @@ def extract_document(
             "extraction_method": "text",
         },
     }
+
+
+def classify_extract_validate(
+    text: str | None,
+    patterns: dict[str, DocTypePattern],
+    templates: dict[str, dict],
+    schemas: dict[str, ValidationSchema],
+    present: "frozenset[str] | None" = None,
+    ml: tuple[str | None, float] = (None, 0.0),
+    apply_custom: bool = True,
+) -> tuple:
+    """One document's decision (document_classifier.py:138-173,
+    batch_processor.py:42) -> (doc_type, confidence, typed fields,
+    validation or None, the schema validated against or None).
+
+    Rule classification of `text` (`present`: its precomputed keyword
+    presence, see keyword_presence_batch) is fused with the model's
+    `ml` = (ml_type, ml_score). Above AUTO_TEMPLATE_MIN_CONFIDENCE, a
+    doc type with a template gets its fields extracted from `text` and,
+    if it has a `<doc_type>_schema`, validated. apply_custom=False leaves
+    the schema's custom validations to the caller, which batches them
+    with validator.apply_custom_validations."""
+    doc_type, confidence = fuse_classification(
+        *classify_by_rules(text, patterns, present=present), *ml
+    )
+    tpl = templates.get(doc_type)
+    if tpl is None or text is None or confidence <= AUTO_TEMPLATE_MIN_CONFIDENCE:
+        return doc_type, confidence, {}, None, None
+    fields = extract_template_fields(text, tpl)
+    schema = schemas.get(f"{doc_type}_schema")
+    if schema is None:
+        return doc_type, confidence, fields, None, None
+    validation = validate_data(fields, schema, apply_custom=apply_custom)
+    return doc_type, confidence, fields, validation, schema
 
 
 def _field_to_string(v) -> str:

@@ -201,11 +201,10 @@ def validate_data(
     """-> {valid, errors{field: msg}, warnings{field: msg}}.
     Reference validator.py:235-324 single-record path.
 
-    Custom validations go through eval_condition_sql_batch with a
-    one-row batch, the evaluator the Spark UDF runs per Arrow batch, so
-    both read a field the same way. apply_custom=False skips them — used
-    by the UDF, which evaluates each condition once per batch and then
-    applies outcomes with apply_custom_outcome."""
+    Custom validations run through apply_custom_validations on a
+    one-row batch, the routine the Spark UDF runs once per schema per
+    Arrow batch, so both read a field the same way. apply_custom=False
+    skips them — used by the UDF, which defers them to that batch call."""
     result = {"valid": True, "errors": {}, "warnings": {}}
 
     for field_name, fs in schema.fields.items():
@@ -232,16 +231,33 @@ def validate_data(
                 result["warnings"][field_name] = error
 
     if apply_custom:
-        for cv in schema.custom_validations:
-            try:
-                ok = eval_condition_sql_batch(
-                    cv["condition_sql"], [data], schema
-                )[0]
-                apply_custom_outcome(result, cv, ok)
-            except Exception as e:
-                apply_custom_outcome(result, cv, True, error=str(e))
+        apply_custom_validations(schema, [data], [result])
 
     return result
+
+
+def apply_custom_validations(
+    schema: ValidationSchema, rows: list[dict], results: list[dict]
+) -> None:
+    """Evaluate each of `schema`'s custom validations over the typed
+    field dicts `rows` as ONE batch (one DuckDB query per condition) and
+    route each row's outcome into its `results` entry. If the batch form
+    fails, each row runs as a one-row batch, which keeps the reference's
+    row-level exception->warning semantics."""
+    for cv in schema.custom_validations:
+        try:
+            oks = eval_condition_sql_batch(cv["condition_sql"], rows, schema)
+            for result, ok in zip(results, oks):
+                apply_custom_outcome(result, cv, ok)
+        except Exception:
+            for row, result in zip(rows, results):
+                try:
+                    ok = eval_condition_sql_batch(
+                        cv["condition_sql"], [row], schema
+                    )[0]
+                    apply_custom_outcome(result, cv, ok)
+                except Exception as e:
+                    apply_custom_outcome(result, cv, True, error=str(e))
 
 
 def apply_custom_outcome(

@@ -50,9 +50,9 @@ def extract_documents(
     its frozen dataclasses travel in the UDF closure as they are. `model`
     is the optional ML classifier (operators/mlhook.py); None classifies
     by rules only, as the reference does without a model file."""
-    patterns = patterns or load_patterns()
-    templates = templates or load_templates()
-    schemas = schemas if schemas is not None else load_schemas()
+    patterns = load_patterns() if patterns is None else patterns
+    templates = load_templates() if templates is None else templates
+    schemas = load_schemas() if schemas is None else schemas
 
     out = normalize_documents(df)
 

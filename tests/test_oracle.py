@@ -340,3 +340,31 @@ def test_template_group0_when_no_groups():
         "see DANFE here", {"fields": {"marker": {"regex": "DANFE"}}}
     )
     assert fields["marker"] == "DANFE"
+
+
+def test_custom_validation_batch_falls_back_to_rows():
+    """One row whose condition raises fails the batch query; each row then
+    runs as a one-row batch, so only that row gets the exception warning
+    and the others keep their own outcomes — the same results
+    validate_data gives each row on its own."""
+    from pdf_extractor_spark.oracle.validator import apply_custom_validations
+
+    schema = ValidationSchema(
+        name="s",
+        fields={"n": FieldSchema(type="number")},
+        custom_validations=(
+            {
+                "name": "fits",
+                "condition_sql": "CAST(n AS INTEGER) > 0",
+                "message": "not positive",
+                "severity": "error",
+            },
+        ),
+    )
+    rows = [{"n": 1.0}, {"n": 1e20}, {"n": -3.0}]
+    results = [validate_data(r, schema, apply_custom=False) for r in rows]
+    apply_custom_validations(schema, rows, results)
+    assert results == [validate_data(r, schema) for r in rows]
+    assert results[0] == {"valid": True, "errors": {}, "warnings": {}}
+    assert results[1]["warnings"]["fits"].startswith("Erro na validação: ")
+    assert results[2]["errors"] == {"fits": "not positive"}
