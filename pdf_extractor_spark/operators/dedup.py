@@ -22,8 +22,9 @@ Six families, each with a distinct scale profile:
                          with parameterizable key width + bucket cap.
   * embedding_neardup_pairs — cosine >= tau within LSH hyperplane blocks.
   * neardup_clusters   — connected components over any pair list
-                         (min-label propagation); the canonical-survivor
-                         assignment step.
+                         (graph.py's pointer-doubling loop, run to a
+                         fixpoint); the canonical-survivor assignment
+                         step.
 
 All pure DataFrame ops; determinism comes from seed-fixed hash families,
 so results are stable across runs and cluster sizes — and every operator
@@ -36,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import cap_heavy_keys, fan_out
+from .graph import _cc_labels
 from .textstats import tokens_col
 
 MINHASH_P = (1 << 31) - 1  # Mersenne prime 2^31-1
@@ -919,7 +921,6 @@ def neardup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iters: int = 20,
 ) -> DataFrame:
     """(id, cluster) — connected components over a near-dup pair list, the
     canonicalization step every dedup pipeline needs after pair detection:
@@ -927,14 +928,12 @@ def neardup_clusters(
     `id == cluster` keeps exactly one survivor per duplicate class, and
     singletons keep themselves).
 
-    Iterative min-label propagation, all DataFrame ops: per round each node
-    takes the min of its own label and its neighbors' labels; rounds needed
-    = graph diameter, and near-dup components are tiny in practice (a
-    duplicate cluster is near-complete after LSH+verify), so this
-    converges in 2-4 rounds. Each round is one shuffle join on id —
-    O(E) per round, never materializing components on the driver. The
-    fixpoint check is one count per round (cheap, and the loop is bounded
-    by max_iters as a safety stop).
+    The pair list runs through `graph._cc_labels`, the pointer-doubling
+    (hash-to-min) loop behind `graph.connected_components`: O(log d)
+    checkpointed rounds for a component of diameter d, iterated to a
+    fixpoint, so a long near-dup chain still lands in one cluster. The
+    component_size join of `connected_components` is skipped; nothing
+    here needs it.
 
     Scale shape: iteration runs ONLY over edge-connected nodes — after
     dedup did its job those are a vanishing fraction of the corpus — so
@@ -943,49 +942,9 @@ def neardup_clusters(
     at the end via a single anti-join with cluster = own id; dragging them
     through every propagation round (the round-1 shape) would shuffle the
     whole corpus per iteration for labels that provably never change."""
-    # localCheckpoint (eager) on the edge list and on each round's labels:
-    # without lineage truncation every iteration's join re-derives the FULL
-    # pair-detection pipeline (measured 6x the intended cost), and the plan
-    # tree doubles per round. The checkpointed frames are bounded — O(near
-    # -dup pairs) and O(members) label rows.
-    edges = (
+    labels = _cc_labels(
         pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id2").alias("src"), F.col("id1").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
-    # the doubled edge list covers every member as src, so src-distinct IS
-    # the connected-node set
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
-        "label", F.col("id")
-    )
-    for _ in range(max_iters):
-        neigh = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nl"))
-        )
-        # carry the previous label through so the fixpoint check is a
-        # plain filter on the materialized frame — no per-round
-        # labels-vs-labels join
-        new = (
-            labels.join(neigh, labels.id == neigh.src, "left")
-            .select(
-                labels.id.alias("id"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nl"), F.col("label"))
-                ).alias("label"),
-                F.col("label").alias("_prev"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.filter(F.col("label") != F.col("_prev")).limit(1).count()
-        )
-        labels = new.select("id", "label")
-        if changed == 0:
-            break
+    ).select(F.col("node").alias("id"), "label")
     singletons = (
         docs.select(F.col(id_col).alias("id"))
         .distinct()

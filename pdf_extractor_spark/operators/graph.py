@@ -774,43 +774,15 @@ def rrf_fusion(
     )
 
 
-def connected_components(
+def _cc_labels(
     edges: DataFrame,
     max_iters: int = 50,
     n_partitions: "int | None" = None,
 ) -> DataFrame:
-    """(host, component, component_size) — EXACT connected components
-    over the undirected closure of the edge set: every node ends with
-    the lexicographic-min member of its component as the component id.
-    Unlike `label_propagation` (a fixed-round community heuristic),
-    this iterates to a FIXPOINT, so the result is the true partition
-    regardless of graph diameter.
-
-    Algorithm: min-label propagation accelerated with pointer doubling
-    (the hash-to-min family, Rastogi et al. / the published MapReduce
-    connected-components literature). Each round does
-
-        l(u) <- min( l(u), min_{v in N(u)} l(v) )     # neighbor min
-        l(u) <- l(l(u))                               # pointer jump
-
-    so label information travels 2^r hops after r rounds — O(log d)
-    rounds for diameter d, each round two label-sized shuffles (one
-    join+aggregate per step). Iteration state is truncated with an
-    eager localCheckpoint every round (the pagerank discipline: lazy
-    plans double per iteration), and the loop stops at the first round
-    that changes no label — the convergence check is a 1-row count, the
-    only driver-side value. Node ids only need a total order; host
-    strings compare lexicographically on both engines (binary
-    collation).
-
-    `n_partitions` sizes the iteration state's partitioning. The loop's
-    per-round cost is (tasks x task-overhead) x rounds, so a checkpoint
-    pinned at the session's full shuffle width makes a SMALL graph pay
-    web-scale task counts every round (measured 16s -> ~2s at sf0.1 for
-    the 500-host wrapper graph at 1 partition). Default None keeps the
-    session width — correct for a web-scale host graph where the label
-    table is node-sized; callers with a bounded node domain (host
-    graphs after host-level rollup often are) should size it down."""
+    """(node, label) — the round loop of `connected_components`: every
+    node of the undirected closure of `edges` (src, dst) ends labelled
+    with the minimum node of its component. See `connected_components`
+    for the algorithm and for `n_partitions`."""
     und = undirected_edges(edges)
     if n_partitions is not None:
         und = und.repartition(n_partitions)
@@ -873,6 +845,56 @@ def connected_components(
         labels = new.select("node", "label")
         if changed == 0:
             break
+    return labels
+
+
+def connected_components(
+    edges: DataFrame,
+    max_iters: int = 50,
+    n_partitions: "int | None" = None,
+) -> DataFrame:
+    """(host, component, component_size) — EXACT connected components
+    over the undirected closure of the edge set: every node ends with
+    the lexicographic-min member of its component as the component id.
+    Unlike `label_propagation` (a fixed-round community heuristic),
+    this iterates to a FIXPOINT, so the result is the true partition
+    regardless of graph diameter.
+
+    Algorithm: min-label propagation accelerated with pointer doubling
+    (the hash-to-min family, Rastogi et al. / the published MapReduce
+    connected-components literature). Each round does
+
+        l(u) <- min( l(u), min_{v in N(u)} l(v) )     # neighbor min
+        l(u) <- l(l(u))                               # pointer jump
+
+    so label information travels 2^r hops after r rounds — O(log d)
+    rounds for diameter d, each round two label-sized shuffles (one
+    join+aggregate per step). Iteration state is truncated with an
+    eager localCheckpoint every round (the pagerank discipline: lazy
+    plans double per iteration), and the loop stops at the first round
+    that changes no label — the convergence check is a 1-row count, the
+    only driver-side value. Node ids only need a total order; host
+    strings compare lexicographically on both engines (binary
+    collation).
+
+    The loop itself is `_cc_labels`, which returns (node, label); this
+    function adds the component_size aggregate and join on top. Callers:
+    `dedup.neardup_clusters` runs `_cc_labels` directly (it needs no
+    sizes) and so backs the dedup and training-data jobs and the
+    neardup_clusters / dedup_survivors / dedup_apply / cluster_size_hist
+    queries; `connected_components` itself is the reference the
+    contraction variants are tested against
+    (tests/test_connected_components.py).
+
+    `n_partitions` sizes the iteration state's partitioning. The loop's
+    per-round cost is (tasks x task-overhead) x rounds, so a checkpoint
+    pinned at the session's full shuffle width makes a SMALL graph pay
+    web-scale task counts every round (measured 16s -> ~2s at sf0.1 for
+    the 500-host wrapper graph at 1 partition). Default None keeps the
+    session width — correct for a web-scale host graph where the label
+    table is node-sized; callers with a bounded node domain (host
+    graphs after host-level rollup often are) should size it down."""
+    labels = _cc_labels(edges, max_iters, n_partitions)
     sizes = labels.groupBy("label").agg(
         F.count("*").alias("component_size")
     )
@@ -943,8 +965,6 @@ def connected_components_contract(
             spark.conf.get("spark.sql.shuffle.partitions", "32")
         )
 
-    schema = "src string, dst string"
-
     def _local(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import numpy as np
 
@@ -957,16 +977,10 @@ def connected_components_contract(
         parent = _np_cc(inv[:m], inv[m:], len(nodes))
         return pd.DataFrame({"src": nodes, "dst": nodes[parent]})
 
-    cur = (
-        edges.select("src", "dst")
-        .union(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    cur = undirected_edges(edges)
+    # the pandas stage hands back node ids unchanged, in the input's type
+    node_type = cur.schema["src"].dataType.simpleString()
+    schema = f"src {node_type}, dst {node_type}"
     p = max(1, int(n_groups))
     while True:
         key = F.pmod(F.xxhash64("src"), F.lit(p)).alias("_g")

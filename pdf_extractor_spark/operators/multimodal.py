@@ -2,12 +2,10 @@
 with typed metadata, processed by Arrow-batched mapInPandas stages.
 
 The decode kernels themselves are STUBBED (the real libs — PIL/ffmpeg/etc —
-are not in this runtime): `deterministic=True` routes to a pure-arithmetic
-fake that is stable across runs/engines (and therefore SQL-mirrorable for
-the correctness oracle); `deterministic=False` raises NotImplementedError at
-the exact point a real decoder would plug in. Everything AROUND the kernel —
-schema, Arrow batch shape, partitioning, output contract — is real and
-tested.
+are not in this runtime): `_fake_decode` is a pure-arithmetic fake that is
+stable across runs/engines (and therefore SQL-mirrorable for the
+correctness oracle). Everything AROUND the kernel — schema, Arrow batch
+shape, partitioning, output contract — is real and tested.
 
 Schema convention:
 
@@ -70,19 +68,12 @@ def _fake_decode(payload: bytes, dim: int) -> list[float]:
     return out
 
 
-def extract_media_features(
-    media: DataFrame, dim: int = 8, deterministic: bool = True
-) -> DataFrame:
+def extract_media_features(media: DataFrame, dim: int = 8) -> DataFrame:
     """mapInPandas feature extraction — the real plumbing around the stubbed
     kernel: Arrow batches in, columnar feature frame out, no driver data."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not deterministic:
-                raise NotImplementedError(
-                    "real image/audio decode requires PIL/ffmpeg — not in "
-                    "this runtime; wire the decoder here"
-                )
             payloads = pdf["payload"]
             yield pd.DataFrame(
                 {

@@ -219,3 +219,29 @@ def test_cc_incremental_merges_batch_exactly(spark):
     assert got["m"] == ("m", 2) and got["n"] == ("m", 2)
     # merged component spans both old chains
     assert got["q"] == ("a", 5)
+
+
+def test_cc_long_node_ids_keep_numeric_order(spark):
+    """Node ids need only a total order: `long` ids compare numerically
+    (2 < 9 < 10), and every variant hands them back as longs."""
+    from pdf_extractor_spark.operators.graph import (
+        connected_components,
+        connected_components_contract,
+        connected_components_incremental,
+    )
+
+    e = spark.createDataFrame([(2, 10), (10, 9)], "src long, dst long")
+    want = {2: (2, 3), 9: (2, 3), 10: (2, 3)}
+    for out in (
+        connected_components(e),
+        connected_components_contract(e, n_groups=1),
+        # empty base assignment: every endpoint enters as a new host
+        connected_components_incremental(
+            connected_components_contract(e.limit(0), n_groups=1).select(
+                "host", "component"
+            ),
+            e,
+        ),
+    ):
+        got = {r.host: (r.component, r.component_size) for r in out.collect()}
+        assert got == want

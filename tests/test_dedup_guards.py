@@ -113,6 +113,23 @@ def test_neardup_clusters_no_pairs_is_identity(spark):
     assert got == {7: 7, 8: 8}
 
 
+def test_neardup_clusters_long_chain_is_one_cluster(spark):
+    """A near-dup chain (i, i+1) is one duplicate class however long it
+    is: every doc's cluster is the chain's min id. 31 docs is past what
+    a 20-round one-hop propagation reaches; 201 docs is a 200-hop chain."""
+    from pdf_extractor_spark.operators.dedup import neardup_clusters
+
+    for n in (31, 201):
+        docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "id1 long, id2 long"
+        )
+        got = {
+            r.id: r.cluster for r in neardup_clusters(docs, pairs).collect()
+        }
+        assert got == {i: 0 for i in range(n)}
+
+
 def test_minhash_star_mode_keeps_class_connected(spark, dup_heavy):
     from pdf_extractor_spark.operators.dedup import neardup_clusters
 

@@ -5,6 +5,8 @@ single query's plan can be tuned without paying the full headline run.
 
 Usage: python tools/micro_bench.py [--sf-dir DIR] [--cpus N]
            [--trials 2] query [query ...]
+
+--cpus defaults to the CPUs this process may run on.
 """
 
 from __future__ import annotations
@@ -25,7 +27,9 @@ def _force(df) -> None:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument(
+        "--cpus", type=int, default=len(os.sched_getaffinity(0))
+    )
     ap.add_argument("--trials", type=int, default=2)
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
