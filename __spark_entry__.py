@@ -2257,77 +2257,44 @@ def _span_regression(spark, sf_dir):
     """The north-star invariant as an operator: span-sequence diff
     between two extraction runs over the deterministic interleaved span
     layout (page_filter's 5-page/2-media synthesis). Run B simulates a
-    regressed extractor: every 7th doc's page-1 text gains a trailing
-    '!' and every (doc_id % 11 == 3) doc loses its second media span."""
+    regressed extractor: every 7th doc's page-1 text (offset 2) gains a
+    trailing '!' and every (doc_id % 11 == 3) doc loses its second media
+    span (m1)."""
     from pdf_extractor_spark.operators.spans import span_diff
 
     docs = _t(spark, sf_dir, "documents")
-    t = F.col("text")
-    empty = F.array().cast(
-        "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    did = F.col("doc_id")
+    spans = _interleaved_span_layout(F.col("text"))
+    banged = F.transform(
+        spans,
+        lambda s: s.withField(
+            "text",
+            F.when(
+                (s["offset"] == 2) & (did % 7 == 0),
+                F.concat(s["text"], F.lit("!")),
+            ).otherwise(s["text"]),
+        ),
+    )
+    regressed = F.filter(
+        banged,
+        lambda s: ~(s["media_ref"].eqNullSafe("m1") & (did % 11 == 3)),
     )
 
-    def tspan(i: int, off: int, perturbed: bool):
-        txt = F.substring(t, 1 + i * 40, 40)
-        if perturbed and i == 1:
-            txt = F.when(
-                F.col("doc_id") % 7 == 0, F.concat(txt, F.lit("!"))
-            ).otherwise(txt)
-        return F.when(
-            F.length(t) > i * 40,
-            F.array(
-                F.struct(
-                    F.lit("text").alias("kind"),
-                    txt.alias("text"),
-                    F.lit(None).cast("string").alias("media_ref"),
-                    F.lit(off).cast("int").alias("offset"),
-                )
-            ),
-        ).otherwise(empty)
-
-    def mspan(ref: str, off: int, min_len: int, dropped=None):
-        cond = F.length(t) > min_len
-        if dropped is not None:
-            cond = cond & ~dropped
-        return F.when(
-            cond,
-            F.array(
-                F.struct(
-                    F.lit("image").alias("kind"),
-                    F.lit(None).cast("string").alias("text"),
-                    F.lit(ref).alias("media_ref"),
-                    F.lit(off).cast("int").alias("offset"),
-                )
-            ),
-        ).otherwise(empty)
-
-    regressed = F.col("doc_id") % 11 == 3
-
-    def run(perturbed: bool):
-        spans = F.concat(
-            tspan(0, 0, perturbed),
-            mspan("m0", 1, 0),
-            tspan(1, 2, perturbed),
-            tspan(2, 3, perturbed),
-            mspan("m1", 4, 80, dropped=regressed if perturbed else None),
-            tspan(3, 5, perturbed),
-            tspan(4, 6, perturbed),
-        )
+    def run(spans_col):
         return docs.select(
-            F.col("doc_id").cast("string").alias("doc_id"),
-            spans.alias("spans"),
+            did.cast("string").alias("doc_id"), spans_col.alias("spans")
         )
 
-    return span_diff(run(False), run(True))
+    return span_diff(run(spans), run(regressed))
 
 
 def _interleaved_span_layout(t):
     """Deterministic interleaved span layout derived from a document's
     text column: up to 5 text pages (40-char windows, present while text
     is long enough) with media spans after pages 0 and 2 — the
-    RE2-replicable span synthesis shared by page_filter and
-    extract_pipeline_digest (offsets 0..6 in order: t0, m0, t1, t2, m1,
-    t3, t4)."""
+    RE2-replicable span synthesis shared by page_filter,
+    extract_pipeline_digest and span_regression (offsets 0..6 in order:
+    t0, m0, t1, t2, m1, t3, t4)."""
     empty = F.array().cast(
         "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
     )

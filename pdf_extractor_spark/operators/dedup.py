@@ -1266,6 +1266,24 @@ def _banding_scoreboard(sig, truth, bands, rows_per_band):
     )
 
 
+def _check_band_layouts(
+    caller: str, layouts: "list[tuple[int, int]]", num_hashes: int
+) -> None:
+    """Reject (bands, rows_per_band) layouts before any Spark job: an
+    empty list, a zero row count (every doc lands in one bucket per band,
+    so every pair is silently a candidate), a zero band count (no band
+    column to join on) or more hashes than the signature has (an
+    unresolved h{i} column, late)."""
+    if not layouts:
+        raise ValueError(f"{caller}: layouts must not be empty")
+    for bands, rows_per_band in layouts:
+        if bands < 1 or rows_per_band < 1 or bands * rows_per_band > num_hashes:
+            raise ValueError(
+                f"{caller}: layout ({bands}, {rows_per_band}) needs "
+                f"1 <= bands * rows_per_band <= num_hashes={num_hashes}"
+            )
+
+
 def lsh_candidate_eval(
     df: DataFrame,
     text_col: str = "text",
@@ -1298,6 +1316,9 @@ def lsh_candidate_eval(
     Scale: the eval is meant for a SAMPLED corpus (its exact-Jaccard
     truth is inherently quadratic in shingle-sharing docs); the
     signature/banding side scales like minhash_lsh itself."""
+    _check_band_layouts(
+        "lsh_candidate_eval", [(bands, rows_per_band)], num_hashes
+    )
     sid = _portable_sids(df, text_col, id_col, n)
     sig = _minhash_sig_from_sids(sid, num_hashes, seed)
     truth = _exact_jaccard_truth(sid, threshold)
@@ -1347,14 +1368,7 @@ def lsh_bands_sweep(
     input (the test-SF default the oracle mirrors)."""
     if layouts is None:
         layouts = [(8, 2), (4, 4), (2, 8)]
-    if not layouts:
-        raise ValueError("lsh_bands_sweep: layouts must not be empty")
-    for bands, rows_per_band in layouts:
-        if bands < 1 or rows_per_band < 1 or bands * rows_per_band > num_hashes:
-            raise ValueError(
-                f"lsh_bands_sweep: layout ({bands}, {rows_per_band}) needs "
-                f"1 <= bands * rows_per_band <= num_hashes={num_hashes}"
-            )
+    _check_band_layouts("lsh_bands_sweep", layouts, num_hashes)
     if sample_mod is not None and sample_mod > 1:
         bucket = F.pmod(
             simhash_token_hash(

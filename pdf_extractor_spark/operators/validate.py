@@ -1,23 +1,21 @@
 """Validation operators (reference validator.py, SURVEY.md §2.5).
 
-Two implementations, used for different surfaces:
+`classify_extract_validate_udf` is the PIPELINE stage: ONE Arrow-batched
+pandas UDF, a batch shell around the oracle's per-document function
+`oracle.extract.classify_extract_validate` (rule classification, the
+optional ML model, the fusion cascade, template field extraction AND
+schema validation; exact Python-`re`/strptime parity, typed values flow
+directly from extraction into validation like in the reference). The
+shell batches what is cheaper per batch: keyword presence, model scoring
+and the custom-SQL validations. One Python crossing per batch. Each batch
+ends by dropping the worker's cached zip finders
+(`session.drop_zip_finders`), so the next task start does not re-read
+Spark's zips.
 
-1. `classify_extract_validate_udf` — the PIPELINE stage: ONE Arrow-batched
-   pandas UDF, a batch shell around the oracle's per-document function
-   `oracle.extract.classify_extract_validate` (rule classification, the
-   optional ML model, the fusion cascade, template field extraction AND
-   schema validation; exact Python-`re`/strptime parity, typed values
-   flow directly from extraction into validation like in the reference).
-   The shell batches what is cheaper per batch: keyword presence, model
-   scoring and the custom-SQL validations. One Python crossing per batch.
-   Each batch ends by dropping the worker's cached zip finders
-   (`session.drop_zip_finders`), so the next task start does not re-read
-   Spark's zips.
-
-2. `field_error_col` / `cpf_valid_col` / `cnpj_valid_col` — fully COLUMNAR
-   field validators (whole-stage codegen, no Python) compiled from the same
-   schema config. These power the standalone validation queries over string
-   columns and demonstrate that even mod-11 check digits need no UDF.
+`span_validations` is the per-span view: typed candidates (email, CPF,
+CNPJ, date) detected in text spans and checked by the COLUMNAR validators
+`field_error_col` / `cpf_valid_col` / `cnpj_valid_col` (whole-stage
+codegen, no Python; even the mod-11 check digits need no UDF).
 """
 
 from __future__ import annotations
@@ -26,7 +24,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import DocTypePattern, FieldSchema, ValidationSchema
+from ..config import DocTypePattern, ValidationSchema
 from ..oracle.extract import AUTO_TEMPLATE_MIN_CONFIDENCE  # noqa: F401 — re-exported
 
 VALIDATION_TYPE = T.StructType(
@@ -152,25 +150,18 @@ def classify_extract_validate_udf(
 
 # --------------------------------------------------------------------------
 # Columnar field validators over STRING input (the coercion-from-string
-# semantics of validator.py:41-233), compiled from FieldSchema config.
-# Each returns an error-message Column (null == valid).
+# semantics of validator.py:41-233) for the four option-less types
+# span_validations detects. Each returns an error-message Column
+# (null == valid).
 # --------------------------------------------------------------------------
 
 # lenient day/month widths (d, M) so "5/3/2024" parses like Python
 # strptime %d/%m does; order mirrors validator.py:109-112's fallbacks
 _DATE_FALLBACK_SPARK = ["yyyy-M-d", "d/M/yyyy", "M/d/yyyy", "d-M-yyyy"]
-_STRPTIME_TO_SPARK = {
-    "%Y-%m-%d": "yyyy-M-d",
-    "%d/%m/%Y": "d/M/yyyy",
-    "%m/%d/%Y": "M/d/yyyy",
-    "%d-%m-%Y": "d-M-yyyy",
-}
 
 
-def _err(cond: Column, msg) -> Column:
-    return F.when(cond, F.lit(None).cast("string")).otherwise(
-        msg if isinstance(msg, Column) else F.lit(msg)
-    )
+def _err(ok: Column, msg: str) -> Column:
+    return F.when(ok, F.lit(None).cast("string")).otherwise(F.lit(msg))
 
 
 def _digit_sum(digits: Column, weights: list[int], start: int = 0) -> Column:
@@ -233,146 +224,38 @@ def cnpj_valid_col(value: Column) -> Column:
 
 
 _EMAIL_RE = r"^[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}$"
-_INT_RE = r"^[+-]?\d+$"
-_NUM_RE = r"^[+-]?(\d+(\.\d*)?|\.\d+)([eE][+-]?\d+)?$"
+# field type -> (digit count, check-digit validator)
+_CHECK_DIGIT_IDS = {"cpf": (11, cpf_valid_col), "cnpj": (14, cnpj_valid_col)}
 
 
-def field_error_col(value: Column, fs: FieldSchema) -> Column:
-    """Error message (null = valid) for a STRING-typed value column, per the
-    reference's coercion semantics. None values are valid (validator.py:43)."""
-    o = fs.options
-    t = fs.type
-
-    if t == "string":
-        err = F.lit(None).cast("string")
-        if "min_length" in o:
-            err = F.when(
-                F.length(value) < o["min_length"],
-                F.lit(f"String muito curta (mínimo: {o['min_length']})"),
-            ).otherwise(err)
-        if "max_length" in o:
-            err = F.when(
-                F.length(value) > o["max_length"],
-                F.lit(f"String muito longa (máximo: {o['max_length']})"),
-            ).otherwise(err)
-        # precedence: min_length error wins over max_length like the
-        # reference's elif chain; pattern checked last
-        if "pattern" in o:
-            pat = o["pattern"]
-            if not pat.startswith("^"):
-                pat = "^" + pat  # re.match anchors at start
-            err = F.coalesce(
-                err,
-                _err(value.rlike(pat), "String não corresponde ao padrão esperado"),
-            )
-
-    elif t in ("number", "decimal"):
-        num = F.regexp_replace(value, ",", ".")
-        parsed = F.when(num.rlike(_NUM_RE), num.cast("double"))
-        err = F.when(
-            parsed.isNull(), F.lit("Não é possível converter para número")
-        )
-        if "min" in o:
-            err = F.coalesce(
-                err,
-                _err(parsed >= o["min"],
-                     f"Número muito pequeno (mínimo: {o['min']})"),
-            )
-        if "max" in o:
-            err = F.coalesce(
-                err,
-                _err(parsed <= o["max"],
-                     f"Número muito grande (máximo: {o['max']})"),
-            )
-        err = F.coalesce(err, F.lit(None).cast("string"))
-
-    elif t == "integer":
-        parsed = F.when(value.rlike(_INT_RE), value.cast("long"))
-        err = F.when(
-            parsed.isNull(), F.lit("Não é possível converter para inteiro")
-        )
-        if "min" in o:
-            err = F.coalesce(
-                err,
-                _err(parsed >= o["min"],
-                     f"Inteiro muito pequeno (mínimo: {o['min']})"),
-            )
-        if "max" in o:
-            err = F.coalesce(
-                err,
-                _err(parsed <= o["max"],
-                     f"Inteiro muito grande (máximo: {o['max']})"),
-            )
-        err = F.coalesce(err, F.lit(None).cast("string"))
-
-    elif t == "date":
-        if "format" in o:
-            fmt = _STRPTIME_TO_SPARK.get(o["format"])
-            if fmt is None:
-                raise ValueError(f"unsupported date format {o['format']!r}")
-            # try_to_date: ANSI mode must yield a validation error row,
-            # never a thrown DateTimeException killing the job
-            parsed = F.try_to_date(value, fmt)
-            err = F.when(parsed.isNull(), F.lit("Data inválida"))
-        else:
-            parsed = F.coalesce(
-                *[F.try_to_date(value, f) for f in _DATE_FALLBACK_SPARK]
-            )
-            err = F.when(
-                parsed.isNull(), F.lit("Formato de data não reconhecido")
-            )
-        if "min_date" in o:
-            err = F.coalesce(
-                err,
-                _err(parsed >= F.lit(o["min_date"]).cast("date"),
-                     f"Data anterior ao mínimo permitido ({o['min_date']})"),
-            )
-        elif "max_date" in o:  # replicated elif-shadowing quirk (SURVEY §2.9)
-            err = F.coalesce(
-                err,
-                _err(parsed <= F.lit(o["max_date"]).cast("date"),
-                     f"Data posterior ao máximo permitido ({o['max_date']})"),
-            )
-        err = F.coalesce(err, F.lit(None).cast("string"))
-
-    elif t == "boolean":
-        low = F.lower(value)
-        ok = low.isin("true", "yes", "sim", "1", "verdadeiro",
-                      "false", "no", "não", "0", "falso")
-        err = _err(ok, "Não é possível converter para booleano")
-
-    elif t == "email":
+def field_error_col(value: Column, field_type: str) -> Column:
+    """Error message (null = valid) for a STRING-typed value column of one
+    of the option-less types span_validations detects (email, cpf, cnpj,
+    date with the fallback formats), with validate_field's messages. None
+    values are valid (validator.py:43). Any other type raises ValueError:
+    the pipeline validates typed fields with validate_field itself."""
+    if field_type == "email":
         err = _err(value.rlike(_EMAIL_RE), "Email inválido")
-
-    elif t == "cpf":
+    elif field_type in _CHECK_DIGIT_IDS:
+        n, valid = _CHECK_DIGIT_IDS[field_type]
+        label = field_type.upper()
         d = F.regexp_replace(value, r"\D", "")
         err = (
-            F.when(F.length(d) != 11, F.lit("CPF deve ter 11 dígitos"))
-            .when(~cpf_valid_col(value), F.lit("CPF inválido"))
+            F.when(F.length(d) != n, F.lit(f"{label} deve ter {n} dígitos"))
+            .when(~valid(value), F.lit(f"{label} inválido"))
             .otherwise(F.lit(None).cast("string"))
         )
-
-    elif t == "cnpj":
-        d = F.regexp_replace(value, r"\D", "")
-        err = (
-            F.when(F.length(d) != 14, F.lit("CNPJ deve ter 14 dígitos"))
-            .when(~cnpj_valid_col(value), F.lit("CNPJ inválido"))
-            .otherwise(F.lit(None).cast("string"))
+    elif field_type == "date":
+        # try_to_date: ANSI mode must yield a validation error row, never
+        # a thrown DateTimeException killing the job
+        parsed = F.coalesce(
+            *[F.try_to_date(value, f) for f in _DATE_FALLBACK_SPARK]
         )
-
-    elif t == "enum":
-        values = o.get("values")
-        if not values:
-            err = F.lit("Opções de enum não definidas")
-        else:
-            err = _err(
-                value.isin(*values),
-                "Valor deve ser um dos seguintes: " + ", ".join(values),
-            )
-
+        err = _err(parsed.isNotNull(), "Formato de data não reconhecido")
     else:
-        err = F.lit(f"Tipo de campo desconhecido: {t}")
-
+        raise ValueError(
+            f"field_error_col: unsupported field type {field_type!r}"
+        )
     return F.when(value.isNull(), F.lit(None).cast("string")).otherwise(err)
 
 
@@ -402,8 +285,6 @@ def span_validations(df: DataFrame, spans_col: str = "spans") -> DataFrame:
     answers "is this document's extracted record valid"; this view answers
     "where in the document does each (in)valid value sit", which is what a
     span-level training-data filter consumes."""
-    from ..config import FieldSchema
-
     s = df.select(
         "doc_id",
         F.explode(spans_col).alias("s"),
@@ -418,7 +299,7 @@ def span_validations(df: DataFrame, spans_col: str = "spans") -> DataFrame:
     entries = []
     for name, rx, ftype in SPAN_FIELD_DETECTORS:
         value = F.nullif(F.regexp_extract(F.col("_text"), f"({rx})", 1), F.lit(""))
-        err = field_error_col(value, FieldSchema(type=ftype))
+        err = field_error_col(value, ftype)
         entries.append(
             F.struct(
                 F.lit(name).alias("field"),

@@ -10,13 +10,13 @@ engine composes end-to-end from bytes when needed. The decode kernel is a
 PARAMETER (`kernel=`): any callable with the per-producer contract plugs
 in — tests/test_producer_kernel.py proves the seam with an injected fake
 kernel unconditionally and with a real pdfplumber parse when the library
-is importable. With no kernel given, `deterministic=True` routes to a
-pure-arithmetic fake (stable across runs/engines);
-`deterministic=False` builds the real kernel from
-pdfplumber / pdf2image+tesseract / camelot and raises NotImplementedError
-only when those libraries are absent from the runtime. Everything around
-the kernel — mapInPandas signature, Arrow batch shape, output spans schema,
-page numbering, the tesseract language map — is real and tested either way.
+is importable. `kernel=None` runs a pure-arithmetic stub (stable across
+runs/engines); `real_text_kernel()` / `real_ocr_kernel()` /
+`real_table_kernel()` return the pdfplumber / pdf2image+tesseract /
+camelot kernel, or raise NotImplementedError when those libraries are
+absent from the runtime. Everything around the kernel — the one
+mapInPandas batch shell, Arrow batch shape, output spans schema, page
+numbering, the tesseract language map — is real and tested either way.
 """
 
 from __future__ import annotations
@@ -57,7 +57,7 @@ PRODUCED_SPANS_SCHEMA = T.StructType(
 
 
 def _fake_page_texts(payload: bytes, lang: str) -> list[str]:
-    """Deterministic stand-in for per-page OCR text: page count from the
+    """Stable stand-in for per-page OCR text: page count from the
     payload length, page text from byte slices (hex words)."""
     n_pages = max(1, len(payload) % 7)
     pages = []
@@ -68,9 +68,15 @@ def _fake_page_texts(payload: bytes, lang: str) -> list[str]:
     return pages
 
 
+def _fake_table_count(payload: bytes) -> int:
+    """Stable stand-in for a table parse: table count from the
+    payload length."""
+    return len(payload) % 3
+
+
 def stub_text_kernel(payload: bytes) -> list[str]:
-    """Deterministic fake PDF text parse: page count / page text derived
-    from the payload bytes (stable across runs and engines)."""
+    """Fake PDF text parse: page count / page text derived from
+    the payload bytes (stable across runs and engines)."""
     b = payload or b""
     n_pages = max(1, len(b) % 5)
     per = max(1, len(b) // n_pages)
@@ -184,82 +190,71 @@ def real_text_kernel():
     return pdfplumber_text_kernel
 
 
-def text_producer(
-    docs: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    deterministic: bool = True,
-    kernel=None,
-) -> DataFrame:
-    """(doc_id, payload binary) -> (doc_id, spans): the PyPDF2/pdfplumber
-    text path (extractor.py:37-92) — one text span per page, offset = page
-    index. `kernel(payload: bytes) -> list[str]` (page texts) is
-    pluggable; default = deterministic stub, or the pdfplumber kernel
-    when deterministic=False."""
-    if kernel is None:
-        kernel = stub_text_kernel if deterministic else real_text_kernel()
+def _produce(docs: DataFrame, row_spans, lang_col: str | None = None):
+    """The batch shell every producer runs: one mapInPandas over
+    (doc_id, payload[, lang]) rows, `row_spans(doc_id, payload, lang)`
+    building each row's span list (payload b"" for null, lang "en" when
+    absent or null)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_ids, out_spans = [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                pages = kernel(payload or b"")
-                out_ids.append(str(did))
-                out_spans.append(
-                    [
-                        {
-                            "kind": "text",
-                            "text": t,
-                            "media_ref": None,
-                            "offset": p,
-                        }
-                        for p, t in enumerate(pages)
-                    ]
-                )
-            yield pd.DataFrame({"doc_id": out_ids, "spans": out_spans})
+            ids = [str(did) for did in pdf["doc_id"]]
+            langs = pdf[lang_col] if lang_col else ["en"] * len(pdf)
+            spans = [
+                row_spans(did, payload or b"", lang or "en")
+                for did, payload, lang in zip(ids, pdf["payload"], langs)
+            ]
+            yield pd.DataFrame({"doc_id": ids, "spans": spans})
 
     return docs.mapInPandas(run, PRODUCED_SPANS_SCHEMA)
 
 
+def _page_spans(pages: list[str]) -> list[dict]:
+    # one text span per page, offset = page index
+    return [
+        {"kind": "text", "text": t, "media_ref": None, "offset": p}
+        for p, t in enumerate(pages)
+    ]
+
+
+def text_producer(docs: DataFrame, kernel=None) -> DataFrame:
+    """(doc_id, payload binary) -> (doc_id, spans): the PyPDF2/pdfplumber
+    text path (extractor.py:37-92) — one text span per page, offset = page
+    index. `kernel(payload: bytes) -> list[str]` (page texts) is
+    pluggable; None = the payload-derived stub, real_text_kernel() = the
+    pdfplumber kernel."""
+    if kernel is None:
+        kernel = stub_text_kernel
+    return _produce(
+        docs, lambda did, payload, lang: _page_spans(kernel(payload))
+    )
+
+
 def dispatch_extract(
     docs: DataFrame,
-    method_col: str = "extraction_method",
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
     lang_col: str | None = None,
-    deterministic: bool = True,
     text_kernel=None,
     ocr_kernel=None,
     table_kernel=None,
 ) -> DataFrame:
     """Method dispatch (extractor.py:26-36: the extraction_methods dict
     routing 'text'/'ocr'/'tables' to their extractors), Spark shape: one
-    FILTER per method + the matching producer + unionByName — three narrow
-    pipelines over disjoint row sets, no per-row branching, each method's
-    mapInPandas sees only its own rows. Unknown methods fall back to 'text'
-    (the reference's .get(default) at :34 resolves to extract_text).
-    Per-method kernels pass through to the producers."""
+    FILTER per `extraction_method` value + the matching producer +
+    unionByName — three narrow pipelines over disjoint row sets, no
+    per-row branching, each method's mapInPandas sees only its own rows.
+    Unknown methods fall back to 'text' (the reference's .get(default) at
+    :34 resolves to extract_text). Per-method kernels pass through to the
+    producers."""
     from pyspark.sql import functions as F
 
-    m = F.coalesce(F.col(method_col), F.lit("text"))
+    m = F.coalesce(F.col("extraction_method"), F.lit("text"))
     text_rows = docs.filter(~m.isin("ocr", "tables"))
     ocr_rows = docs.filter(m == "ocr")
     table_rows = docs.filter(m == "tables")
     return (
-        text_producer(
-            text_rows, payload_col, id_col, deterministic, text_kernel
-        )
-        .unionByName(
-            ocr_producer(
-                ocr_rows, payload_col, id_col, lang_col, deterministic,
-                ocr_kernel,
-            )
-        )
-        .unionByName(
-            table_producer(
-                table_rows, payload_col, id_col, deterministic, table_kernel
-            )
-        )
+        text_producer(text_rows, text_kernel)
+        .unionByName(ocr_producer(ocr_rows, lang_col, ocr_kernel))
+        .unionByName(table_producer(table_rows, table_kernel))
     )
 
 
@@ -289,43 +284,20 @@ def real_ocr_kernel():
 
 
 def ocr_producer(
-    docs: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    lang_col: str | None = None,
-    deterministic: bool = True,
-    kernel=None,
+    docs: DataFrame, lang_col: str | None = None, kernel=None
 ) -> DataFrame:
     """(doc_id, payload binary[, lang]) -> (doc_id, spans): one text span
     per OCR'd page, offset = page index (extractor.py:196-219 semantics:
-    page_N keys -> offset N-1). mapInPandas;
-    `kernel(payload: bytes, lang: str) -> list[str]` is pluggable
-    (default: deterministic stub; deterministic=False demands the
-    pdf2image/tesseract stack via real_ocr_kernel)."""
+    page_N keys -> offset N-1). `kernel(payload: bytes, lang: str) ->
+    list[str]` is pluggable; None = the payload-derived stub,
+    real_ocr_kernel() = the pdf2image/tesseract kernel."""
     if kernel is None:
-        kernel = (
-            (lambda payload, lang: _fake_page_texts(payload, lang))
-            if deterministic
-            else real_ocr_kernel()
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_spans = [], []
-            langs = pdf[lang_col] if lang_col else ["en"] * len(pdf)
-            for did, payload, lang in zip(pdf[id_col], pdf[payload_col], langs):
-                pages = kernel(payload or b"", lang or "en")
-                out_ids.append(str(did))
-                out_spans.append(
-                    [
-                        {"kind": "text", "text": t, "media_ref": None,
-                         "offset": i}
-                        for i, t in enumerate(pages)
-                    ]
-                )
-            yield pd.DataFrame({"doc_id": out_ids, "spans": out_spans})
-
-    return docs.mapInPandas(run, PRODUCED_SPANS_SCHEMA)
+        kernel = _fake_page_texts
+    return _produce(
+        docs,
+        lambda did, payload, lang: _page_spans(kernel(payload, lang)),
+        lang_col,
+    )
 
 
 def camelot_table_kernel(payload: bytes) -> int:
@@ -354,40 +326,23 @@ def real_table_kernel():
     return camelot_table_kernel
 
 
-def table_producer(
-    docs: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    deterministic: bool = True,
-    kernel=None,
-) -> DataFrame:
+def table_producer(docs: DataFrame, kernel=None) -> DataFrame:
     """(doc_id, payload binary) -> (doc_id, spans): one table span per
     detected table with media_ref 'table://{doc_id}/{n}' (extractor.py:
     118-138: table_N keys; camelot lattice first, tabula fallback).
-    `kernel(payload: bytes) -> int` (table count) is pluggable."""
+    `kernel(payload: bytes) -> int` (table count) is pluggable; None =
+    the payload-derived stub, real_table_kernel() = the camelot kernel."""
     if kernel is None:
-        kernel = (
-            (lambda payload: len(payload or b"") % 3)
-            if deterministic
-            else real_table_kernel()
-        )
+        kernel = _fake_table_count
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_spans = [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                n_tables = kernel(payload or b"")
-                out_ids.append(str(did))
-                out_spans.append(
-                    [
-                        {"kind": "table", "text": None,
-                         "media_ref": f"table://{did}/{i}", "offset": i}
-                        for i in range(n_tables)
-                    ]
-                )
-            yield pd.DataFrame({"doc_id": out_ids, "spans": out_spans})
+    def table_spans(did, payload, lang):
+        return [
+            {"kind": "table", "text": None,
+             "media_ref": f"table://{did}/{i}", "offset": i}
+            for i in range(kernel(payload))
+        ]
 
-    return docs.mapInPandas(run, PRODUCED_SPANS_SCHEMA)
+    return _produce(docs, table_spans)
 
 
 def scan_pdf_dir(

@@ -111,3 +111,22 @@ def test_lsh_bands_sweep_rejects_bad_layouts_at_entry(spark, kwargs, msg):
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
     with pytest.raises(ValueError, match=msg):
         lsh_bands_sweep(docs, **kwargs)
+
+
+@pytest.mark.parametrize(
+    "kwargs, msg",
+    [
+        # every doc would share one bucket per band: all pairs candidates
+        ({"rows_per_band": 0}, r"layout \(4, 0\)"),
+        # no bands: no band column to join on
+        ({"bands": 0}, r"layout \(0, 4\)"),
+        # more hashes than the signature has: an unresolved h{i} column
+        ({"bands": 4, "rows_per_band": 8}, r"layout \(4, 8\).*num_hashes=16"),
+    ],
+)
+def test_lsh_candidate_eval_rejects_bad_layouts_at_entry(spark, kwargs, msg):
+    from pdf_extractor_spark.operators.dedup import lsh_candidate_eval
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="lsh_candidate_eval: " + msg):
+        lsh_candidate_eval(docs, **kwargs)

@@ -7,7 +7,7 @@ Three layers of evidence:
   1. an injected FAKE kernel (runs unconditionally) — proves the seam is
      pluggable, the kernel sees the raw payload bytes, and span order /
      offsets / kinds follow the kernel's output;
-  2. deterministic=False without the real libraries raises
+  2. real_text_kernel() without the real libraries raises
      NotImplementedError at plan-build time (the documented seam);
   3. a REAL kernel parses a hand-written minimal 2-page PDF and the span
      contract holds end-to-end: pdfplumber when importable, else the
@@ -86,11 +86,14 @@ HAVE_PDFPLUMBER = importlib.util.find_spec("pdfplumber") is not None
     HAVE_PDFPLUMBER, reason="pdfplumber present; seam error path is moot"
 )
 def test_real_kernel_absent_raises_at_plan_build(spark):
-    from pdf_extractor_spark.sources.producers import text_producer
+    from pdf_extractor_spark.sources.producers import (
+        real_text_kernel,
+        text_producer,
+    )
 
     docs = _docs(spark, [("d1", b"x")])
     with pytest.raises(NotImplementedError, match="pdfplumber"):
-        text_producer(docs, deterministic=False)
+        text_producer(docs, kernel=real_text_kernel())
 
 
 def _minimal_two_page_pdf(compress: bool = False) -> bytes:
@@ -156,12 +159,13 @@ def test_real_kernel_contract_on_real_pdf_bytes(spark):
     (sufficient for the uncompressed hand-written fixture)."""
     from pdf_extractor_spark.sources.producers import (
         minipdf_text_kernel,
+        real_text_kernel,
         text_producer,
     )
 
     docs = _docs(spark, [("real1", _minimal_two_page_pdf())])
     if HAVE_PDFPLUMBER:
-        out = text_producer(docs, deterministic=False).collect()
+        out = text_producer(docs, kernel=real_text_kernel()).collect()
     else:
         out = text_producer(docs, kernel=minipdf_text_kernel).collect()
     spans = out[0]["spans"]

@@ -5,7 +5,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.pipeline import extract_documents
-from pdf_extractor_spark.sources.producers import ocr_producer, table_producer
+from pdf_extractor_spark.sources.producers import (
+    ocr_producer,
+    real_ocr_kernel,
+    table_producer,
+)
 
 
 @pytest.fixture(scope="module")
@@ -56,7 +60,7 @@ def test_producer_output_feeds_pipeline(spark, raw_docs):
 
 def test_real_kernel_is_explicit_stub(spark, raw_docs):
     with pytest.raises(Exception) as ei:
-        ocr_producer(raw_docs, deterministic=False).collect()
+        ocr_producer(raw_docs, kernel=real_ocr_kernel()).collect()
     assert "NotImplementedError" in str(ei.value) or isinstance(
         ei.value, NotImplementedError
     )

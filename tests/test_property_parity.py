@@ -5,7 +5,8 @@ Batched for Spark economy: each hypothesis example is a LIST of strings
 evaluated in one DataFrame job, so a run costs ~10 jobs, not ~200.
 """
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -49,43 +50,88 @@ def test_language_detection_parity(spark, texts):
     assert got == want
 
 
+# mod-11 check-digit weights (public algorithm, written out independently
+# of the oracle): CPF 10..2 then 11..2; CNPJ 5..2,9..2 then 6,5..2,9..2
+_CPF_WEIGHTS = (list(range(10, 1, -1)), list(range(11, 1, -1)))
+_CNPJ_W1 = [5, 4, 3, 2, 9, 8, 7, 6, 5, 4, 3, 2]
+_CNPJ_WEIGHTS = (_CNPJ_W1, [6] + _CNPJ_W1)
+
+
+def _check_digits(digits: list[int], weights) -> list[int]:
+    out = list(digits)
+    for w in weights:
+        r = sum(d * x for d, x in zip(out, w)) % 11
+        out.append(0 if r < 2 else 11 - r)
+    return out
+
+
+def _id_strings(weights, punct: str):
+    """Random base digits, then either their valid check digits or two
+    random ones; rendered bare or punctuated like `punct` (a template
+    whose '#' marks digits)."""
+    return st.tuples(
+        st.lists(
+            st.integers(0, 9),
+            min_size=len(weights[0]),
+            max_size=len(weights[0]),
+        ),
+        st.booleans(),
+        st.lists(st.integers(0, 9), min_size=2, max_size=2),
+        st.booleans(),
+    ).map(
+        lambda t: _render(
+            _check_digits(t[0], weights) if t[1] else t[0] + t[2],
+            punct if t[3] else None,
+        )
+    )
+
+
+def _render(digits: list[int], punct: str | None) -> str:
+    s = "".join(map(str, digits))
+    if punct is None:
+        return s
+    it = iter(s)
+    return "".join(next(it) if c == "#" else c for c in punct)
+
+
 _values = st.lists(
     st.one_of(
         st.none(),
         st.text(max_size=20),
         st.from_regex(r"[0-9]{1,5}([.,][0-9]{1,4})?", fullmatch=True),
         st.from_regex(r"[0-9]{1,2}[/-][0-9]{1,2}[/-][0-9]{2,4}", fullmatch=True),
-        st.sampled_from(
-            ["true", "Sim", "não", "0", "1", "verdadeiro", "FALSO", "maybe"]
-        ),
         st.from_regex(r"[a-z]{1,8}@[a-z]{1,8}\.[a-z]{2,3}", fullmatch=True),
+        _id_strings(_CPF_WEIGHTS, "###.###.###-##"),
+        _id_strings(_CNPJ_WEIGHTS, "##.###.###/####-##"),
     ),
     min_size=8,
     max_size=24,
 )
 
 
+_ID_LITERALS = [
+    "123.456.789-09", "12.345.678/0001-95",  # pass validate_field
+    "12.345.678/0001-90", "111.111.111-11",  # fail it
+]
+
+
 @given(values=_values)
+@example(values=_ID_LITERALS + [None, "a@b.co", "5/3/2024", "12345678909"])
 @settings(**_SETTINGS)
 def test_field_validator_parity(spark, values):
-    """Columnar field_error_col vs oracle validate_field for the
-    coercion-from-string types (number/integer/date/boolean/email)."""
-    from pdf_extractor_spark.config import FieldSchema
+    """Columnar field_error_col vs oracle validate_field for the four
+    types span_validations checks (email/cpf/cnpj/date, no options)."""
     from pdf_extractor_spark.operators.validate import field_error_col
     from pdf_extractor_spark.oracle.validator import validate_field
 
-    types = ["number", "integer", "date", "boolean", "email"]
-    schemas = {t: FieldSchema(type=t) for t in types}
+    types = ["email", "cpf", "cnpj", "date"]
 
     df = spark.createDataFrame(
         [(str(i), v) for i, v in enumerate(values)], "id string, v string"
     )
     out = df.select(
         "id",
-        *[
-            field_error_col(F.col("v"), schemas[t]).alias(f"e_{t}")
-            for t in types
-        ],
+        *[field_error_col(F.col("v"), t).alias(f"e_{t}") for t in types],
     )
     got = {r.id: {t: r[f"e_{t}"] for t in types} for r in out.collect()}
     for i, v in enumerate(values):
@@ -93,6 +139,16 @@ def test_field_validator_parity(spark, values):
             ok, err = validate_field(v, t, {})
             want = None if ok else err
             assert got[str(i)][t] == want, (v, t, got[str(i)][t], want)
+
+
+def test_field_error_col_rejects_other_types(spark):
+    # the pipeline validates every other type with validate_field itself;
+    # the columnar validator covers only what span_validations detects
+    from pdf_extractor_spark.operators.validate import field_error_col
+
+    for t in ["string", "number", "decimal", "integer", "boolean", "enum"]:
+        with pytest.raises(ValueError, match=f"unsupported field type '{t}'"):
+            field_error_col(F.col("v"), t)
 
 
 _words = st.one_of(

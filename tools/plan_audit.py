@@ -375,8 +375,12 @@ def main() -> None:
     with open(out, "w") as f:
         f.write(
             "# PLAN_AUDIT — physical-plan shape of every query\n\n"
-            "Generated by `tools/plan_audit.py` at sf0.001 (plan shapes are"
-            " scale-invariant; AQE may further coalesce at runtime)."
+            "Generated by `tools/plan_audit.py` at sf0.001. Shapes are"
+            " recorded at that scale only: join strategy can differ at"
+            " benchmark scale (e.g. `neardup_clusters`' singleton"
+            " anti-join is a BHJ at sf0.001 and an SMJ at sf0.1, once the"
+            " checkpointed label frame outgrows the broadcast threshold),"
+            " and AQE may further coalesce at runtime."
             " Global invariants enforced: zero row-at-a-time PythonUDF"
             " stages, zero cartesian products, and nested-loop joins only"
             " where the build side is a 1-row scalar aggregate"
